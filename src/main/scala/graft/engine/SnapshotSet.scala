@@ -49,10 +49,6 @@ object SnapshotSet {
         .map { case (t, v) => Row(t, v) }: _*),
       ManifestSchema).coalesce(1)
 
-  /** Commit every table, then publish the set in one manifest commit.
-    * Returns the manifest version. Crash before the final commit ⇒ the
-    * previous set stays served; nothing partial is ever readable.
-    */
   /** The whole set commits under ONE protocol: the manifest root's
     * sticky mode (or, for a brand-new set, the process default captured
     * once here). Threaded explicitly into every table-root commit so a
@@ -63,13 +59,25 @@ object SnapshotSet {
   private def setMode(s: SparkSession, root: String): Some[CommitMode] =
     Some(VersionedTable.modeOf(s, manifestRoot(root)))
 
+  /** Commit every table to its own root, concurrently — the roots are
+    * independent [[VersionedTable]]s, and nothing is visible until the
+    * caller's single manifest commit. Returns (table -> version).
+    */
+  private def commitTables(root: String, tables: Map[String, DataFrame],
+      mode: Some[CommitMode]): Map[String, Long] =
+    Parallel.map(tables.toSeq) { case (name, df) =>
+      name -> VersionedTable.commit(df, tableRoot(root, name), mode)
+    }.toMap
+
+  /** Commit every table, then publish the set in one manifest commit.
+    * Returns the manifest version. Crash before the final commit ⇒ the
+    * previous set stays served; nothing partial is ever readable.
+    */
   def publish(s: SparkSession, root: String,
       tables: Map[String, DataFrame]): Long = {
     require(tables.nonEmpty, "SnapshotSet.publish: empty table set")
     val mode = setMode(s, root)
-    val committed = tables.map { case (name, df) =>
-      name -> VersionedTable.commit(df, tableRoot(root, name), mode)
-    }
+    val committed = commitTables(root, tables, mode)
     VersionedTable.commit(manifestDf(s, committed), manifestRoot(root), mode)
   }
 
@@ -85,9 +93,7 @@ object SnapshotSet {
     if (VersionedTable.versions(s, manifestRoot(root)).contains(setId))
       return false
     val mode = setMode(s, root)
-    val committed = tables.map { case (name, df) =>
-      name -> VersionedTable.commit(df, tableRoot(root, name), mode)
-    }
+    val committed = commitTables(root, tables, mode)
     VersionedTable.commitIfAbsent(manifestDf(s, committed),
       manifestRoot(root), setId, mode)
   }
@@ -134,9 +140,7 @@ object SnapshotSet {
     // theirs would be a silent lost update, so the loser must raise
     // instead (the optimistic-concurrency contract every table format
     // exposes as "ConcurrentModificationException: changed since read").
-    val committed = tables.map { case (name, df) =>
-      name -> VersionedTable.commit(df, tableRoot(root, name), mode)
-    }
+    val committed = commitTables(root, tables, mode)
     beforeMergeManifestPut()
     var attempt = latestSet(s, root).map(_ + 1L).getOrElse(0L)
     val lastAttempt = attempt + 10000L // liveness guard, as in VersionedTable

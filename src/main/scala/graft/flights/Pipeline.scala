@@ -1,19 +1,25 @@
 package graft.flights
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
-import graft.engine.{Incremental, Sinks, Sources}
+import graft.engine.{Incremental, Parallel, Reliability, Sinks, Sources}
 
 /** The orchestration layer (SURVEY.md §2.10 O1-O5): the reference's
   * per-day DAG run — extract each staging table for the logical date,
   * load idempotently, then rebuild the star schema — as one driver call.
   *
-  *   - O1: per-table extract->load in the FK-safe order declared in the
-  *     reference (`start.sh:20-23`; irrelevant for parquet, kept for
-  *     determinism and parity);
-  *   - O2: transforms strictly dims-then-facts
-  *     (`dags/flights_data_pipeline.py:229-251`);
+  *   - O1: statuses keyed by table, loads concurrent — every table's
+  *     extract->load writes its own staging root and CSV edge dir, so the
+  *     reference's FK-safe serial order (`start.sh:20-23`, a Postgres
+  *     constraint) buys nothing for parquet; a failed table still fails
+  *     the run, after its siblings finish;
+  *   - O2: dims wave, then facts wave — the 4 dims rebuild concurrently,
+  *     then the 4 facts (`dags/flights_data_pipeline.py:229-251`). In a
+  *     failed non-atomic `transform`, sibling tables of the same wave may
+  *     already be rewritten; readers who need all-or-nothing use
+  *     `transformAtomic`;
   *   - O4: a table with an empty increment is skipped, and its previously
   *     loaded days remain untouched;
   *   - O5: `PipelineConfig` replaces the Airflow Variables surface
@@ -41,7 +47,9 @@ final case class PipelineConfig(
 
 object Pipeline {
 
-  /** FK-safe load order (reference `start.sh:20-23`). */
+  /** The 8 staging tables in the reference's FK-safe load order
+    * (`start.sh:20-23`); their loads run concurrently.
+    */
   val FkOrder: Seq[String] = Seq(
     "aircrafts_data", "airports_data", "bookings", "tickets",
     "seats", "flights", "ticket_flights", "boarding_passes")
@@ -70,45 +78,53 @@ object Pipeline {
   private def loadFor(spark: SparkSession, source: Map[String, DataFrame],
       warehouseDir: String, ds: String, cfg: PipelineConfig,
       dayScopedWrites: Boolean): Map[String, Incremental.LoadStatus] =
-    cfg.tables.map { table =>
-      val extracted =
-        if (cfg.incremental) Incremental.dayWindow(source(table), cfg.tsCol, ds)
-        else source(table)
-      // persisted so the emptiness check, the write, and the returned
-      // row count all see one snapshot of the extract
-      val pinned = extracted.persist()
-      val status =
-        try {
-          val rows = pinned.count()
-          if (rows == 0) Incremental.SkippedEmpty
-          else graft.engine.Reliability.withRetry(
-            s"load:$table", maxAttempts = cfg.loadAttempts, baseDelayMs = 50,
-            onAlert = cfg.onFailure) {
-            // retry-safe by construction: the idempotent day-partition
-            // overwrite (S6) / truncate-load (S7) make a second attempt
-            // land on clean state, never a double append
-            val loaded =
-              if (cfg.csvEdge) {
-                // the reference's MinIO hop: extract writes CSV, load
-                // re-reads it under the declared schema (S3 -> S5)
-                val edge =
-                  if (dayScopedWrites) s"$warehouseDir/edge/$ds/$table"
-                  else s"$warehouseDir/edge/$table"
-                Sources.writeCsv(pinned, edge)
-                Sources.readCsv(spark, pinned.schema, edge)
-              } else pinned
-            if (cfg.incremental && dayScopedWrites)
-              Sinks.overwriteSingleDayPartition(loaded, cfg.tsCol, ds,
-                stgPath(warehouseDir, table))
-            else if (cfg.incremental)
-              Sinks.overwriteDayPartitions(loaded, cfg.tsCol, stgPath(warehouseDir, table))
-            else
-              Sinks.truncateLoad(loaded, stgPath(warehouseDir, table))
-            Incremental.Loaded(if (cfg.csvEdge) loaded.count() else rows)
-          }
-        } finally pinned.unpersist()
-      table -> status
+    Parallel.map(cfg.tables) { table =>
+      // retry-safe by construction: the idempotent day-partition
+      // overwrite (S6) / truncate-load (S7) make a second attempt land on
+      // clean state, never a double append
+      table -> Reliability.withRetry(s"load:$table", maxAttempts = cfg.loadAttempts,
+        baseDelayMs = 50, onAlert = cfg.onFailure) {
+        val extracted =
+          if (cfg.incremental) Incremental.dayWindow(source(table), cfg.tsCol, ds)
+          else source(table)
+        val stg = stgPath(warehouseDir, table)
+        def load(df: DataFrame): Unit =
+          if (cfg.incremental && dayScopedWrites)
+            Sinks.overwriteSingleDayPartition(df, cfg.tsCol, ds, stg)
+          else if (cfg.incremental) Sinks.overwriteDayPartitions(df, cfg.tsCol, stg)
+          else Sinks.truncateLoad(df, stg)
+        if (cfg.csvEdge) {
+          // the reference's MinIO hop: extract writes CSV, load re-reads
+          // it under the declared schema (S3 -> S5). The CSV files are the
+          // snapshot: each write counts its own rows in the same job
+          val edge =
+            if (dayScopedWrites) s"$warehouseDir/edge/$ds/$table"
+            else s"$warehouseDir/edge/$table"
+          val extractedRows = countedWrite(extracted)(Sources.writeCsv(_, edge))
+          if (extractedRows == 0) Incremental.SkippedEmpty
+          else Incremental.Loaded(
+            countedWrite(Sources.readCsv(spark, extracted.schema, edge))(load))
+        } else {
+          // persisted so the emptiness check, the write, and the returned
+          // row count all see one snapshot of the extract
+          val pinned = extracted.persist()
+          try {
+            val rows = pinned.count()
+            if (rows == 0) Incremental.SkippedEmpty
+            else { load(pinned); Incremental.Loaded(rows) }
+          } finally pinned.unpersist()
+        }
+      }
     }.toMap
+
+  /** Run `write` on `df` and return the number of rows it wrote, taken
+    * from the write job itself rather than from a second counting job.
+    */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
 
   /** Rebuild the 8 warehouse tables (dims before facts) from whatever the
     * staging layer currently holds. Tables whose staging input has never
@@ -116,17 +132,23 @@ object Pipeline {
     * (the reference would have failed its transform task; we treat the
     * run as partial).
     */
-  def transform(spark: SparkSession, warehouseDir: String): Unit = {
+  def transform(spark: SparkSession, warehouseDir: String): Unit =
+    loadedStaging(spark, warehouseDir).foreach { stg =>
+      val (dims, facts) = StarSchema.transforms.partition(_._1.startsWith("dim_"))
+      Seq(dims, facts).foreach(wave => Parallel.map(wave) { case (name, fn) =>
+        Sinks.truncateLoad(fn(stg), s"$warehouseDir/$name")
+      })
+    }
+
+  /** Every staging table, or None while any of them has never loaded. */
+  private def loadedStaging(spark: SparkSession,
+      warehouseDir: String): Option[Map[String, DataFrame]] = {
     val fs = new Path(warehouseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stg: Map[String, DataFrame] = FkOrder.flatMap { t =>
+    val stg = FkOrder.flatMap { t =>
       val p = stgPath(warehouseDir, t)
       if (fs.exists(new Path(p))) Some(t -> spark.read.parquet(p)) else None
     }.toMap
-    if (FkOrder.forall(stg.contains)) {
-      StarSchema.transforms.foreach { case (name, fn) =>
-        Sinks.truncateLoad(fn(stg), s"$warehouseDir/$name")
-      }
-    }
+    if (FkOrder.forall(stg.contains)) Some(stg) else None
   }
 
   /** The star rebuild as ONE atomic version set: all 8 dims/facts
@@ -139,16 +161,10 @@ object Pipeline {
     * Returns the published set version, or None when staging is
     * incomplete (the same partial-run skip as `transform`).
     */
-  def transformAtomic(spark: SparkSession, warehouseDir: String): Option[Long] = {
-    val fs = new Path(warehouseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stg: Map[String, DataFrame] = FkOrder.flatMap { t =>
-      val p = stgPath(warehouseDir, t)
-      if (fs.exists(new Path(p))) Some(t -> spark.read.parquet(p)) else None
-    }.toMap
-    if (!FkOrder.forall(stg.contains)) None
-    else Some(graft.engine.SnapshotSet.publish(spark, s"$warehouseDir/star",
-      StarSchema.transforms.map { case (name, fn) => name -> fn(stg) }.toMap))
-  }
+  def transformAtomic(spark: SparkSession, warehouseDir: String): Option[Long] =
+    loadedStaging(spark, warehouseDir).map(stg =>
+      graft.engine.SnapshotSet.publish(spark, s"$warehouseDir/star",
+        StarSchema.transforms.map { case (name, fn) => name -> fn(stg) }.toMap))
 
   /** The reference's `catchup=True` backfill: ordered daily runs
     * (`max_active_runs=1`).
@@ -158,9 +174,9 @@ object Pipeline {
       cfg: PipelineConfig = PipelineConfig()): Map[String, Map[String, Incremental.LoadStatus]] =
     days.map(ds => ds -> runFor(spark, source, warehouseDir, ds, cfg)).toMap
 
-  /** Backfill with the days loaded CONCURRENTLY (bounded by
-    * `parallelism` driver threads — Spark schedules jobs from multiple
-    * threads fine), then ONE star-schema rebuild at the end instead of
+  /** Backfill with the days loaded CONCURRENTLY (at most `parallelism`
+    * days in flight, each loading its tables concurrently as in
+    * `runFor`), then ONE star-schema rebuild at the end instead of
     * one per day. Safe because each (table, day) write job targets its
     * own partition directory (disjoint data AND disjoint committer
     * staging — see `Sinks.overwriteSingleDayPartition`); the transform
@@ -177,19 +193,10 @@ object Pipeline {
       cfg: PipelineConfig = PipelineConfig(),
       parallelism: Int = 4): Map[String, Map[String, Incremental.LoadStatus]] = {
     require(cfg.incremental, "parallel backfill needs day-partitioned (incremental) loads")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val futures = days.map { ds =>
-        ds -> scala.concurrent.Future(
-          loadFor(spark, source, warehouseDir, ds, cfg, dayScopedWrites = true))
-      }
-      val results = futures.map { case (ds, f) =>
-        ds -> scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-      }.toMap
-      transform(spark, warehouseDir)
-      results
-    } finally pool.shutdown()
+    val results = Parallel.map(days, parallelism) { ds =>
+      ds -> loadFor(spark, source, warehouseDir, ds, cfg, dayScopedWrites = true)
+    }.toMap
+    transform(spark, warehouseDir)
+    results
   }
 }

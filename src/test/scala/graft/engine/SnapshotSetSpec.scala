@@ -46,6 +46,25 @@ class SnapshotSetSpec extends SparkSpec {
     assert(s1 > s0)
   }
 
+  test("publish whose table fails at execution leaves the previous set served") {
+    import spark.implicits._
+    val root = tmp()
+    val s0 = SnapshotSet.publish(spark, root,
+      Map("dim" -> Seq((1L, "a")).toDF("k", "v"),
+        "fact" -> Seq((1L, 10L)).toDF("k", "n")))
+    val e = intercept[Exception](SnapshotSet.publish(spark, root,
+      Map("dim" -> Seq((1L, "a2")).toDF("k", "v"),
+        "fact" -> spark.range(3).select(col("id").as("k"),
+          raise_error(lit("fact rebuild broken")).cast("long").as("n")))))
+    assert(e.getMessage.contains("fact rebuild broken"))
+    // the sibling's table commit may have landed; no manifest names it
+    assert(SnapshotSet.latestSet(spark, root) === Some(s0))
+    assert(SnapshotSet.readTable(spark, root, "dim")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet === Set((1L, "a")))
+    assert(SnapshotSet.readTable(spark, root, "fact")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 10L)))
+  }
+
   test("publishIfAbsent: replayed set ids are skipped commits") {
     import spark.implicits._
     val root = tmp()

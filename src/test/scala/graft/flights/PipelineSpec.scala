@@ -3,9 +3,11 @@ package graft.flights
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{lit, raise_error}
 
 import graft.SparkSpec
 import graft.engine.Incremental.{Loaded, SkippedEmpty}
+import graft.engine.Reliability
 
 /** End-to-end pipeline contract (SURVEY.md §5.5-5.6): a 3-day backfill
   * over the fixtures must reconstruct exactly the star schema computed
@@ -98,11 +100,41 @@ class PipelineSpec extends SparkSpec {
     val whDirect = tmpDir()
     val whCsv = tmpDir()
     val src = Fixtures.stg(spark)
-    Pipeline.backfill(spark, src, whDirect, Days)
-    Pipeline.backfill(spark, src, whCsv, Days, PipelineConfig(csvEdge = true))
+    val direct = Pipeline.backfill(spark, src, whDirect, Days)
+    val csv = Pipeline.backfill(spark, src, whCsv, Days, PipelineConfig(csvEdge = true))
+    // the row counts the CSV path observes on its writes, and its
+    // empty-increment skips (aircrafts_data, seats on 2024-06-11), match
+    // the direct path's counts of the extract
+    assert(csv == direct, "per-(day, table) load statuses must agree")
+    assert(csv("2024-06-11")("aircrafts_data") == SkippedEmpty &&
+      csv("2024-06-11")("seats") == SkippedEmpty)
     (Pipeline.FkOrder.map(t => s"stg/$t") ++ StarSchema.transforms.map(_._1)).foreach { t =>
       assert(canon(spark.read.parquet(s"$whCsv/$t")) == canon(spark.read.parquet(s"$whDirect/$t")),
         s"$t differs when routed through the CSV edge")
+    }
+  }
+
+  test("a table failing every attempt fails the run once, after its siblings load") {
+    val src = Fixtures.stg(spark)
+    val broken = src.updated("flights",
+      src("flights").filter(raise_error(lit("flights extract broken")).isNull))
+    val clean = tmpDir()
+    Pipeline.runFor(spark, src, clean, Days.head)
+    Seq(false, true).foreach { csvEdge =>
+      val wh = tmpDir()
+      val alerts = new java.util.concurrent.ConcurrentLinkedQueue[Reliability.Attempt]()
+      val cfg = PipelineConfig(csvEdge = csvEdge, loadAttempts = 2, onFailure = alerts.add(_))
+      val e = intercept[Exception](Pipeline.runFor(spark, broken, wh, Days.head, cfg))
+      assert(e.getMessage.contains("flights extract broken"), s"csvEdge=$csvEdge")
+      // the on_failure_callback analog fires once, for the broken table,
+      // after its last attempt
+      assert(alerts.size == 1, s"csvEdge=$csvEdge")
+      assert(alerts.peek().task == "load:flights" && alerts.peek().attempt == 2,
+        s"csvEdge=$csvEdge")
+      Pipeline.FkOrder.filterNot(_ == "flights").foreach { t =>
+        assert(canon(spark.read.parquet(s"$wh/stg/$t")) == canon(spark.read.parquet(s"$clean/stg/$t")),
+          s"stg/$t did not land beside the failed table (csvEdge=$csvEdge)")
+      }
     }
   }
 }
