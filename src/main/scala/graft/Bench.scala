@@ -13,6 +13,23 @@ import org.apache.spark.sql.SparkSession
   * bench as scan-only).
   */
 object Bench {
+
+  /** The one-time table writes every timed run amortizes (bucketed star
+    * facts, persisted ANN index, suffix-array and KMV element
+    * artifacts), for each of `dirs` — setup cost, not query cost, so
+    * they are materialized outside the timed window. The SA is the big
+    * one: its cold build is the suite's only super-linear term (r16:
+    * 410 s inside x174's timed window at the 100x corpus); as a
+    * fingerprint-keyed published artifact it is built once per corpus
+    * state, exactly like a production publish.
+    */
+  def ensureArtifacts(spark: SparkSession, dirs: Seq[String]): Unit = {
+    dirs.foreach(graft.ops.BucketedStar.ensure(spark, _))
+    dirs.foreach(graft.ext.Similarity.buildAnnIndex(spark, _))
+    dirs.foreach(graft.ext.SuffixDedup.ensureSa(spark, _))
+    dirs.foreach(graft.ops.Sketches.ensureKmvElements(spark, _))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the driver's local[32] (and RunOne): a lower-core
@@ -52,22 +69,8 @@ object Bench {
         java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // one-time table writes (bucketed star facts, persisted ANN index,
-    // the suffix-array artifact) are amortized setup cost, not query
-    // cost — materialize both dirs' copies outside the timed window.
-    // The SA is the big one: its cold build is the suite's only
-    // super-linear term (r16: 410 s inside x174's timed window at the
-    // 100x corpus); as a fingerprint-keyed published artifact it is
-    // built once per corpus state, exactly like a production publish.
     try {
-      graft.ops.BucketedStar.ensure(spark, warmDir)
-      graft.ops.BucketedStar.ensure(spark, sfDir)
-      graft.ext.Similarity.buildAnnIndex(spark, warmDir)
-      graft.ext.Similarity.buildAnnIndex(spark, sfDir)
-      graft.ext.SuffixDedup.ensureSa(spark, warmDir): Unit
-      graft.ext.SuffixDedup.ensureSa(spark, sfDir): Unit
-      graft.ops.Sketches.ensureKmvElements(spark, warmDir): Unit
-      graft.ops.Sketches.ensureKmvElements(spark, sfDir): Unit
+      ensureArtifacts(spark, Seq(warmDir, sfDir))
       // store hygiene, same posture as bench_frozen.sh's scratch sweep:
       // retire artifact roots no live corpus resolves (superseded
       // fingerprints of rewritten corpora — ~292 MB/round at 100x),

@@ -32,19 +32,10 @@ object RunOne {
         java.nio.file.Files.createTempDirectory("graft_runone_wh").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // same amortized setup as Bench (bucketed star facts, ANN index,
-    // suffix-array artifact) so per-query numbers here are the same
-    // steady state the suite measures
-    try {
-      graft.ops.BucketedStar.ensure(spark, warmDir)
-      graft.ops.BucketedStar.ensure(spark, sfDir)
-      graft.ext.Similarity.buildAnnIndex(spark, warmDir)
-      graft.ext.Similarity.buildAnnIndex(spark, sfDir)
-      graft.ext.SuffixDedup.ensureSa(spark, warmDir): Unit
-      graft.ext.SuffixDedup.ensureSa(spark, sfDir): Unit
-      graft.ops.Sketches.ensureKmvElements(spark, warmDir): Unit
-      graft.ops.Sketches.ensureKmvElements(spark, sfDir): Unit
-    } catch { case _: Throwable => () }
+    // same amortized setup as Bench so per-query numbers here are the
+    // same steady state the suite measures
+    try Bench.ensureArtifacts(spark, Seq(warmDir, sfDir))
+    catch { case _: Throwable => () }
     // a comma list shares one session across queries (JVM+codegen
     // startup would otherwise dominate a multi-query measurement loop)
     name.split(",").foreach { nm =>

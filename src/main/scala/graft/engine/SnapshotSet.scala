@@ -278,14 +278,13 @@ object SnapshotSet {
     * the DuckDB twin computes the same join from the base tables, and
     * any read that leaks the orphan version hash-fails.
     */
-  private val twinRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val twinRoots = SessionMemo[String, String]("SnapshotSet.twinRoots")
 
   def atomicPublishTwin(s: SparkSession, dir: String): DataFrame = {
     // one published root per (session, dir) — repeat invocations reuse
     // it (the x157 no-temp-leak discipline); publish + crash simulation
     // happen once
-    val root = twinRoots.computeIfAbsent((s, dir), _ => {
+    val root = twinRoots(s, dir) {
       val r = java.nio.file.Files.createTempDirectory("graft_set").toString
       val nation = Tables(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
@@ -297,7 +296,7 @@ object SnapshotSet {
         nation.withColumn("n_name", lit("ORPHAN")),
         s"$r/tables/nation")
       r
-    })
+    }
     readTable(s, root, "nation")
       .join(readTable(s, root, "region"),
         col("n_regionkey") === col("r_regionkey"))
@@ -314,11 +313,10 @@ object SnapshotSet {
     * region, and nation would fall back to the base snapshot →
     * hash-fail against the twin).
     */
-  private val mergeTwinRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val mergeTwinRoots = SessionMemo[String, String]("SnapshotSet.mergeTwinRoots")
 
   def mergePublishTwin(s: SparkSession, dir: String): DataFrame = {
-    val root = mergeTwinRoots.computeIfAbsent((s, dir), _ => {
+    val root = mergeTwinRoots(s, dir) {
       val r = java.nio.file.Files.createTempDirectory("graft_mset").toString
       val nation = Tables(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
@@ -330,7 +328,7 @@ object SnapshotSet {
       publishMerged(s, r, Map(
         "region" -> region.withColumn("r_name", concat(col("r_name"), lit("_v2")))))
       r
-    })
+    }
     readTable(s, root, "nation")
       .join(readTable(s, root, "region"),
         col("n_regionkey") === col("r_regionkey"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Clustering operators over the `embeddings` table: integer-exact Lloyd
@@ -188,23 +188,12 @@ object Clustering {
     * the r18 note on assignedWithNorms), but its pinned inputs (seed,
     * centroids) now materialize once per key.
     */
-  private val lloydCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), (DataFrame, DataFrame)]()
-
-  /** Spec seam: drop every (session, dir)-keyed memo so an in-session
-    * corpus rewrite is observable (the SuffixDedup.resetSessionCaches
-    * contract). indexRootCache is included — its filesystem root is
-    * rebuilt on next use.
-    */
-  private[graft] def resetSessionCaches(): Unit = {
-    lloydCache.clear(); nVecCache.clear(); asgCache.clear()
-    dupCache.clear(); qaGroupCache.clear(); repEncodeCache.clear()
-    bookCache.clear(); ivfpqModelCache.clear(); indexRootCache.clear()
-  }
+  private val lloydCache =
+    SessionMemo[(String, Int, Int), (DataFrame, DataFrame)]("Clustering.lloyd")
 
   private def lloyd(s: SparkSession, dir: String, k: Int,
       iters: Int): (DataFrame, DataFrame) =
-    lloydCache.computeIfAbsent((s, dir, k, iters), _ =>
+    lloydCache(s, (dir, k, iters))(
       lloydOn(qvecs(s, dir), k, iters))
 
   def kmeansEmbed(s: SparkSession, dir: String, k: Int = 8, iters: Int = 2): DataFrame = {
@@ -257,15 +246,12 @@ object Clustering {
     * target=512 keeps k at the base 8 through the sf0.1 bench decade
     * (n=2,000), so every graded oracle and the steady-state bench plan
     * are byte-identical; the scaling engages only past n=4,096. The
-    * count is one parquet-footer read, memoized per (session, dataset).
+    * count is one parquet-footer read, memoized per (session, dataset)
+    * by [[Similarity.embCount]].
     */
-  private val nVecCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-
   private[ext] def scaledK(s: SparkSession, dir: String, base: Int = 8,
       targetClusterSize: Long = 512L): Int = {
-    val n: Long = nVecCache.computeIfAbsent((s, dir),
-      _ => t(s, dir, "embeddings").count())
+    val n = Similarity.embCount(s, dir)
     math.max(base.toLong, (n + targetClusterSize - 1) / targetClusterSize).toInt
   }
 
@@ -280,15 +266,14 @@ object Clustering {
     * downstream legs never join the centroids, so the r18 trade
     * inverts.
     */
-  private val asgCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]()
+  private val asgCache = SessionMemo[(String, Int, Int), DataFrame]("Clustering.asg")
 
   private def assignedWithNorms(s: SparkSession, dir: String, k: Int,
       iters: Int): DataFrame = {
     def frame = lloyd(s, dir, k, iters)._1
       .withColumn("n2", dotL(col("qa"), col("qa")))
     if (k <= 8) frame
-    else asgCache.computeIfAbsent((s, dir, k, iters), _ => frame.pinned)
+    else asgCache(s, (dir, k, iters))(frame.pinned)
   }
 
   /** Within-cluster SemDeDup dup-pair COUNTS + order-free drops over a
@@ -397,16 +382,16 @@ object Clustering {
     * clusterLabels materialize-once discipline; checkpointing the
     * INPUT assignment instead measured slower, see PLANS.md).
     */
-  private val dupCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Long, Long), (DataFrame, DataFrame)]()
+  private val dupCache =
+    SessionMemo[(String, Int, Int, Long, Long), (DataFrame, DataFrame)]("Clustering.dup")
 
   private def cachedDupDrops(s: SparkSession, dir: String, k: Int, iters: Int,
       tauNum: Long, tauDen: Long): (DataFrame, DataFrame) =
-    dupCache.computeIfAbsent((s, dir, k, iters, tauNum, tauDen), _ => {
+    dupCache(s, (dir, k, iters, tauNum, tauDen)) {
       val (dupCounts, drops) =
         dupDrops(assignedWithNorms(s, dir, k, iters), tauNum, tauDen)
       (dupCounts.pinned, drops.pinned)
-    })
+    }
 
   def semdedupKmeans(s: SparkSession, dir: String, k: Int = 8,
       iters: Int = 2, tauNum: Long = 49L, tauDen: Long = 400L): DataFrame = {
@@ -639,11 +624,10 @@ object Clustering {
     * The collapse domain of the x141/x159/x142 encode passes, cached
     * per (session, dataset).
     */
-  private val qaGroupCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val qaGroupCache = SessionMemo[String, DataFrame]("Clustering.qaGroup")
 
   private def qaGroups(s: SparkSession, dir: String): DataFrame =
-    qaGroupCache.computeIfAbsent((s, dir), _ =>
+    qaGroupCache(s, dir)(
       qvecs(s, dir).groupBy(col("qa"))
         .agg(min(col("vec_id")).as("rep"),
           sort_array(collect_list(col("vec_id"))).as("members"),
@@ -664,11 +648,10 @@ object Clustering {
     * aggregate per consumer (~205 M rows per pass at the 100x clone
     * corpus).
     */
-  private val repEncodeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val repEncodeCache = SessionMemo[String, DataFrame]("Clustering.repEncode")
 
   private def repEncode(s: SparkSession, dir: String): DataFrame =
-    repEncodeCache.computeIfAbsent((s, dir), _ =>
+    repEncodeCache(s, dir)(
       pqEncode(repSubDims(s, dir, 8), cachedBook(s, dir)).pinned)
 
   private def pqCodebook(s: SparkSession, dir: String,
@@ -680,11 +663,10 @@ object Clustering {
       seedDims = Some(subDims(s, dir, dsub)))
   }
 
-  private val bookCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val bookCache = SessionMemo[String, DataFrame]("Clustering.book")
 
   private def cachedBook(s: SparkSession, dir: String): DataFrame =
-    bookCache.computeIfAbsent((s, dir), _ => pqCodebook(s, dir, dsub = 8, k = 16))
+    bookCache(s, dir)(pqCodebook(s, dir, dsub = 8, k = 16))
 
   /** x141: PQ codebook utilization — encode the corpus with the trained
     * book and report, per (subspace, code), the member count and total
@@ -859,15 +841,15 @@ object Clustering {
     * discipline). The frames are small: k cells, m·k·dsub book rows,
     * n·m codes.
     */
-  private val ivfpqModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), (DataFrame, DataFrame, DataFrame)]()
+  private val ivfpqModelCache =
+    SessionMemo[(String, Int, Int), (DataFrame, DataFrame, DataFrame)]("Clustering.ivfpqModel")
 
   private def ivfpqModel(s: SparkSession, dir: String, kCoarse: Int,
       numQueries: Int): (DataFrame, DataFrame, DataFrame) =
-    ivfpqModelCache.computeIfAbsent((s, dir, kCoarse, numQueries), _ => {
+    ivfpqModelCache(s, (dir, kCoarse, numQueries)) {
       val (c, b, k) = ivfpqModelPlan(s, dir, kCoarse, numQueries)
       (c.pinned, b.pinned, k.pinned)
-    })
+    }
 
   private def ivfpqModelPlan(s: SparkSession, dir: String, kCoarse: Int,
       numQueries: Int): (DataFrame, DataFrame, DataFrame) =
@@ -1017,20 +999,19 @@ object Clustering {
     * instead of leaking a fresh temp directory per call (the
     * ivfpqModelCache discipline applied to the filesystem side effect).
     */
-  private val indexRootCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), String]()
+  private val indexRootCache = SessionMemo[(String, Int, Int), String]("Clustering.indexRoot")
 
   def ivfpqIndexReload(s: SparkSession, dir: String, kCoarse: Int = 8,
       nprobe: Int = 2, numQueries: Int = 3, k: Int = 10): DataFrame = {
     import graft.engine.VersionedTable
-    val root = indexRootCache.computeIfAbsent((s, dir, kCoarse, numQueries), _ => {
+    val root = indexRootCache(s, (dir, kCoarse, numQueries)) {
       val (cents, book, codes) = ivfpqModel(s, dir, kCoarse, numQueries)
       val r = java.nio.file.Files.createTempDirectory("graft_ivfpq_index").toString
       VersionedTable.commit(cents, s"$r/cents")
       VersionedTable.commit(book, s"$r/book")
       VersionedTable.commit(codes, s"$r/codes")
       r
-    })
+    }
     val rc = VersionedTable.read(s, s"$root/cents")
     val rb = VersionedTable.read(s, s"$root/book")
     val rk = VersionedTable.read(s, s"$root/codes")

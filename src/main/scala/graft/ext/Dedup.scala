@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Deduplication operators for LLM training-data pipelines over
@@ -76,22 +76,10 @@ object Dedup {
     * x86 incremental near-dup) — computed once per (session, dataset,
     * n) and checkpointed, like the gram postings below.
     */
-  private val shingleCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
-
-  /** Spec seam: drop every (session, dir)-keyed memo so an in-session
-    * corpus rewrite is observable (the Similarity.resetSessionCaches /
-    * SuffixDedup.resetSessionCaches contract — without this, a
-    * rewritten corpus dir would be served stale pinned results).
-    */
-  private[graft] def resetSessionCaches(): Unit = {
-    shingleCache.clear(); vpairCache.clear(); postedGroupCache.clear()
-    repPairCache.clear(); ccCache.clear(); groupCache.clear()
-    gramCache.clear(); winnowCache.clear(); allGramCache.clear()
-  }
+  private val shingleCache = SessionMemo[(String, Int), DataFrame]("Dedup.shingle")
 
   private[ext] def shinglePostings(s: SparkSession, dir: String, n: Int = 3): DataFrame =
-    shingleCache.computeIfAbsent((s, dir, n), _ =>
+    shingleCache(s, (dir, n))(
       shinglePostingsPlan(s, dir, n).pinned)
 
   private[ext] def shinglePostingsPlan(s: SparkSession, dir: String, n: Int): DataFrame = {
@@ -163,15 +151,14 @@ object Dedup {
     * pattern — three consumers were re-running the same blocking+verify
     * pipeline per invocation).
     */
-  private val vpairCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]()
+  private val vpairCache = SessionMemo[(String, Int, Int), DataFrame]("Dedup.vpair")
 
   private def verifiedPairsCached(s: SparkSession, dir: String,
       maxDf: Int, minCommon: Int): DataFrame =
-    vpairCache.computeIfAbsent((s, dir, maxDf, minCommon), _ => {
+    vpairCache(s, (dir, maxDf, minCommon)) {
       val posts = shinglePostings(s, dir)
       verifyPairs(dfCutCandidates(posts, maxDf, minCommon), posts).pinned
-    })
+    }
 
   /** Containment-similarity top-k: |A∩B| / min(|A|, |B|) — the
     * SUB-DOCUMENT duplication detector. A short document embedded
@@ -366,11 +353,10 @@ object Dedup {
     * domain shared by `minhashPairs` and `clusterLabels`. Memoized and
     * pinned per (session, dataset) like the shingle cache.
     */
-  private val postedGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val postedGroupCache = SessionMemo[String, DataFrame]("Dedup.postedGroup")
 
   private def postedTextGroups(s: SparkSession, dir: String): DataFrame =
-    postedGroupCache.computeIfAbsent((s, dir), _ =>
+    postedGroupCache(s, dir)(
       textGroups(s, dir, histMax = 0, incrSide = true)
         .join(shinglePostings(s, dir).select(col("doc_id").as("rep")),
           Seq("rep"), "left_semi")
@@ -386,12 +372,11 @@ object Dedup {
     * geometry, threshold) — x12's expansion, x90, x96, and the CC
     * labels all consume one computation.
     */
-  private val repPairCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Double), DataFrame]()
+  private val repPairCache = SessionMemo[(String, Int, Int, Double), DataFrame]("Dedup.repPair")
 
   private def repPairsCached(s: SparkSession, dir: String, bands: Int,
       rowsPerBand: Int, threshold: Double): DataFrame =
-    repPairCache.computeIfAbsent((s, dir, bands, rowsPerBand, threshold), _ =>
+    repPairCache(s, (dir, bands, rowsPerBand, threshold))(
       minhashPairsFromPosts(repPostings(s, dir), bands, rowsPerBand, threshold)
         .pinned)
 
@@ -647,8 +632,7 @@ object Dedup {
     * `VersionedTable` in a real pipeline) and having policies read it,
     * instead of each policy re-deriving the clustering from raw text.
     */
-  private val ccCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val ccCache = SessionMemo[String, DataFrame]("Dedup.cc")
 
   /** Clone-collapsed (the r15 x86/x98 medicine, measured mandatory at
     * the 100x clone corpus where the doc-level pair graph is quadratic
@@ -669,7 +653,7 @@ object Dedup {
     * enter the doc-level graph either).
     */
   private[ext] def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    ccCache.computeIfAbsent((s, dir), _ => {
+    ccCache(s, dir) {
       val groups = postedTextGroups(s, dir)
       val repPairs = repPairsCached(s, dir, bands = 32, rowsPerBand = 2,
           threshold = 0.5)
@@ -681,7 +665,7 @@ object Dedup {
         .select(explode(col("members")).as("id"),
           coalesce(col("lbl"), col("rep")).as("lbl"))
         .pinned
-    })
+    }
 
   /** Duplicate-cluster resolution: the verified near-dup pair set
     * (exact Jaccard >= 0.5, same pairs x12 grades) resolved into
@@ -828,11 +812,10 @@ object Dedup {
     * shingle cache — the banded lanes call this twice per query and the
     * bench reps many times.
     */
-  private val groupCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
+  private val groupCache = SessionMemo[(String, Int), DataFrame]("Dedup.group")
 
   private def sideTextGroups(s: SparkSession, dir: String, histMax: Int): DataFrame =
-    groupCache.computeIfAbsent((s, dir, histMax), _ =>
+    groupCache(s, (dir, histMax))(
       docsT(s, dir)
         .select(col("doc_id"), md5(encode(lower(col("text")), "UTF-8")).as("gk"),
           (col("doc_id") >= histMax).as("incr_side"))
@@ -1061,11 +1044,10 @@ object Dedup {
     * pruned scan of ~10 documents, plan-gated, which beats even a cached
     * full-corpus lookup.)
     */
-  private val gramCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
+  private val gramCache = SessionMemo[(String, Int), DataFrame]("Dedup.gram")
 
   private[ext] def gramPostings(s: SparkSession, dir: String, k: Int): DataFrame =
-    gramCache.computeIfAbsent((s, dir, k), _ =>
+    gramCache(s, (dir, k))(
       docsT(s, dir)
         .select(col("doc_id"),
           posexplode(gramHashes(TextAnalysis.wsTokens(lower(col("text"))), k)))
@@ -1099,11 +1081,10 @@ object Dedup {
     * computed once per (session, dataset, maxDf) and checkpointed, the
     * same materialize-once discipline as `clusterLabels`.
     */
-  private val winnowCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
+  private val winnowCache = SessionMemo[(String, Int), DataFrame]("Dedup.winnow")
 
   def winnowingTopk(s: SparkSession, dir: String, maxDf: Int = 20): DataFrame =
-    winnowCache.computeIfAbsent((s, dir, maxDf), _ =>
+    winnowCache(s, (dir, maxDf))(
       winnowingTopkPlan(s, dir, maxDf).pinned)
 
   private def winnowingTopkPlan(s: SparkSession, dir: String, maxDf: Int): DataFrame = {
@@ -1479,8 +1460,7 @@ object Dedup {
       corpusGrams(docs.filter(col("source") =!= evalSource), n),
       threshold)
 
-  private val allGramCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
+  private val allGramCache = SessionMemo[(String, Int), DataFrame]("Dedup.allGram")
 
   /** The corpus's distinct (doc_id, source, gram hash) frame — built
     * and checkpointed ONCE per (session, dir, n) and filtered by every
@@ -1489,7 +1469,7 @@ object Dedup {
     * was ~12 s per pass and the family paid it five times).
     */
   private[graft] def allGrams(s: SparkSession, dir: String, n: Int): DataFrame =
-    allGramCache.computeIfAbsent((s, dir, n), _ => {
+    allGramCache(s, (dir, n)) {
       val docs = docsT(s, dir)
       docs
         .select(col("doc_id"), col("source"),
@@ -1497,7 +1477,7 @@ object Dedup {
         .select(col("doc_id"), col("source"), TextAnalysis.tokenHash(col("g")).as("h"))
         .distinct()
         .pinned
-    })
+    }
 
   /** Distinct (doc_id, 60-bit n-gram hash) of a (doc_id, text) frame —
     * the probe-side unit (doc grain matters for the per-doc report).

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Entity-resolution operators over the `customer` dimension: an exact
@@ -164,21 +164,16 @@ object Linkage {
     * the x217 oracle replay), and re-blocking cost the sf0.1 suite ~12 s
     * before the memo (the `Dedup.repPairsCached` pattern; pinned so the
     * blocking join runs once, not per consumer action).
+    * [[graft.engine.SessionMemo.reset]] drops it, so an in-session
+    * corpus rewrite is observable.
     */
-  private val repPairCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]()
-
-  /** Spec seam: drop the (session, dir)-keyed memo so an in-session
-    * corpus rewrite is observable (the SuffixDedup.resetSessionCaches
-    * contract).
-    */
-  private[graft] def resetSessionCaches(): Unit = repPairCache.clear()
+  private val repPairCache = SessionMemo[(String, Int, Int), DataFrame]("Linkage.repPair")
 
   private def edRepPairs(s: SparkSession, dir: String, tau: Int,
       cap: Int): (DataFrame, DataFrame) = {
     val nm0 = t(s, dir, "customer")
       .select(col("c_custkey").as("key"), col("c_name").as("nm"))
-    val reps = repPairCache.computeIfAbsent((s, dir, tau, cap), _ =>
+    val reps = repPairCache(s, (dir, tau, cap))(
       repPairCore(distinctNames(nm0), tau, cap).pinned)
     (nm0, reps)
   }

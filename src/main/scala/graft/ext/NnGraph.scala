@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** NN-descent k-NN graph construction over the `embeddings` table — the
@@ -102,12 +102,12 @@ object NnGraph {
     * read one "all"-corpus build; the incremental lane (x194) reads
     * one "standing" build.
     */
-  private val graphCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Int, String), DataFrame]()
+  private val graphCache =
+    SessionMemo[(String, Int, Int, Int, String), DataFrame]("NnGraph.graph")
 
   private[graft] def nnEdges(s: SparkSession, dir: String, k: Int,
       rounds: Int, buckets: Int, tag: String = "all"): DataFrame =
-    graphCache.computeIfAbsent((s, dir, k, rounds, buckets, tag), _ => {
+    graphCache(s, (dir, k, rounds, buckets, tag)) {
       val base = qvecs(s, dir)
       val q = (tag match {
         case "standing" => base.filter(!isArrival(col("vec_id")))
@@ -155,7 +155,7 @@ object NnGraph {
         e = topK(withDist(cand, q), k).pinned
       }
       e
-    })
+    }
 
   /** x187: the NN-descent k-NN graph — per point its k approximate
     * nearest neighbors after `rounds` descent rounds, with grid-exact

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Retrieval operators over the `documents` + `embeddings` tables: Okapi
@@ -162,21 +162,10 @@ object Retrieval {
   /** The full-corpus index is consumed by x123 AND x124's lexical leg —
     * built once per (session, dataset), the cosineTopk discipline.
     */
-  private val indexCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Bm25Index]()
-
-  /** Spec seam: drop every (session, dir)-keyed memo so an in-session
-    * corpus rewrite is observable (the Similarity.resetSessionCaches /
-    * SuffixDedup.resetSessionCaches contract — without this, a
-    * rewritten corpus dir would be served stale pinned results).
-    */
-  private[graft] def resetSessionCaches(): Unit = {
-    indexCache.clear(); boundsCache.clear(); msCache.clear()
-    blockBoundsCache.clear(); bmCache.clear(); mmrCache.clear()
-  }
+  private val indexCache = SessionMemo[String, Bm25Index]("Retrieval.index")
 
   private def fullIndex(s: SparkSession, dir: String): Bm25Index =
-    indexCache.computeIfAbsent((s, dir), _ =>
+    indexCache(s, dir)(
       bm25Build(t(s, dir, "documents").select(col("doc_id"), col("text"))))
 
   private def bm25Scored(s: SparkSession, dir: String, numQueries: Int,
@@ -209,11 +198,10 @@ object Retrieval {
       .crossJoin(broadcast(ix.stats))
       .groupBy(col("term")).agg(max(okapiTsc(k1, b)).as("ub"))
 
-  private val boundsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val boundsCache = SessionMemo[String, DataFrame]("Retrieval.bounds")
 
   private def fullBounds(s: SparkSession, dir: String): DataFrame =
-    boundsCache.computeIfAbsent((s, dir), _ =>
+    boundsCache(s, dir)(
       termBounds(fullIndex(s, dir)).pinned)
 
   /** MaxScore evaluation core (Turtle & Flood 1995): returns the pruned
@@ -371,15 +359,14 @@ object Retrieval {
     * are a handful of rows, materialized once (the ivfpqModelCache
     * discipline).
     */
-  private val msCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
+  private val msCache = SessionMemo[String, (DataFrame, DataFrame)]("Retrieval.ms")
 
   private def maxscoreCached(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    msCache.computeIfAbsent((s, dir), _ => {
+    msCache(s, dir) {
       val (res, st) = maxscoreFromIndex(fullIndex(s, dir), fullBounds(s, dir),
         queryTerms(s, dir, 3), 10)
       (res.pinned, st.pinned)
-    })
+    }
 
   /** x168: MaxScore-pruned BM25 top-k. The oracle is x123's full-scoring
     * SQL VERBATIM — the gate proves the pruned evaluation returns the
@@ -415,11 +402,10 @@ object Retrieval {
       .groupBy(col("term"), shiftright(col("doc_id"), BlockShift).as("blk"))
       .agg(max(okapiTsc(k1, b)).as("bub"))
 
-  private val blockBoundsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val blockBoundsCache = SessionMemo[String, DataFrame]("Retrieval.blockBounds")
 
   private def fullBlockBounds(s: SparkSession, dir: String): DataFrame =
-    blockBoundsCache.computeIfAbsent((s, dir), _ =>
+    blockBoundsCache(s, dir)(
       blockBounds(fullIndex(s, dir)).pinned)
 
   /** Block-Max pruned evaluation: the x168 MaxScore partition PLUS a
@@ -471,15 +457,14 @@ object Retrieval {
     (result, stats)
   }
 
-  private val bmCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
+  private val bmCache = SessionMemo[String, (DataFrame, DataFrame)]("Retrieval.bm")
 
   private def blockmaxCached(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bmCache.computeIfAbsent((s, dir), _ => {
+    bmCache(s, dir) {
       val (res, st) = blockmaxFromIndex(fullIndex(s, dir), fullBounds(s, dir),
         fullBlockBounds(s, dir), queryTerms(s, dir, 3), 10)
       (res.pinned, st.pinned)
-    })
+    }
 
   /** x176: Block-Max pruned BM25 top-k — oracle: the full ranking SQL
     * verbatim, the same exactness gate as x168.
@@ -592,15 +577,14 @@ object Retrieval {
     */
   def mmrRerank(s: SparkSession, dir: String, numQueries: Int = 3,
       poolN: Int = 20, k: Int = 5): DataFrame =
-    mmrCache.computeIfAbsent((s, dir, numQueries, poolN, k), _ =>
+    mmrCache(s, (dir, numQueries, poolN, k))(
       mmrRerankPlan(s, dir, numQueries, poolN, k).pinned)
       .orderBy(col("query_id"), col("step"))
 
   /** Memoized per (session, dataset, params) — x129 and the x223
     * cross-encoder stage both consume this frame (r19 optimization
     * round; the repPairsCached pattern). */
-  private val mmrCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Int), DataFrame]()
+  private val mmrCache = SessionMemo[(String, Int, Int, Int), DataFrame]("Retrieval.mmr")
 
   private def mmrRerankPlan(s: SparkSession, dir: String, numQueries: Int,
       poolN: Int, k: Int): DataFrame = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -79,24 +79,11 @@ object Similarity {
     * computed once per (session, dataset, params) and checkpointed —
     * the same materialize-once discipline as Dedup.clusterLabels.
     */
-  private val exactTopkCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]()
-
-  /** Spec seam: drop every (session, dir)-keyed memo so an in-session
-    * corpus rewrite is observable (the SuffixDedup.resetSessionCaches /
-    * Sketches.resetElementCache contract — without this, a rewritten
-    * corpus dir would be served stale pinned results).
-    */
-  private[graft] def resetSessionCaches(): Unit = {
-    exactTopkCache.clear(); nearDupCache.clear(); countCache.clear()
-    keysCache.clear(); bandedCache.clear(); vecGroupCache.clear()
-    repBandedCache.clear(); incrGroupCache.clear(); pcCache.clear()
-    annBucketCache.clear()
-  }
+  private val exactTopkCache = SessionMemo[(String, Int, Int), DataFrame]("Similarity.exactTopk")
 
   def cosineTopk(s: SparkSession, dir: String,
       numQueries: Int = 5, k: Int = 10): DataFrame =
-    exactTopkCache.computeIfAbsent((s, dir, numQueries, k), _ =>
+    exactTopkCache(s, (dir, numQueries, k))(
       cosineTopkPlan(s, dir, numQueries, k).pinned)
 
   private def cosineTopkPlan(s: SparkSession, dir: String,
@@ -254,11 +241,10 @@ object Similarity {
     * the index CONTENT and every query answer are identical; the count
     * rides the table name, so differently-sized corpora never collide).
     */
-  private val annBucketCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Integer]()
+  private val annBucketCache = SessionMemo[String, Integer]("Similarity.annBucket")
 
   private def annStorageBuckets(s: SparkSession, dir: String): Int =
-    annBucketCache.computeIfAbsent((s, dir), _ => {
+    annBucketCache(s, dir) {
       // adjudication seam (r20): force a fixed count to A/B the adaptive
       // formula against the old constant on the same build — layout
       // only, the index content and every answer are identical
@@ -274,7 +260,7 @@ object Similarity {
           // meaningful, and the cap bounds scheduling at 10^8+ vectors.
           Integer.valueOf(math.max(96L, math.min(4096L, n / 64L)).toInt)
         }
-    }).intValue()
+    }.intValue()
 
   def buildAnnIndex(s: SparkSession, dir: String,
       numTables: Int = 18, bitsPerTable: Int = 4, numBuckets: Int = 0): String = {
@@ -636,8 +622,7 @@ object Similarity {
     * kernel only on candidate buckets; the per-pair arithmetic is
     * identical either way.
     */
-  private val nearDupCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double, Int), DataFrame]()
+  private val nearDupCache = SessionMemo[(String, Double, Int), DataFrame]("Similarity.nearDup")
 
   /** The O(n²/2) kernel result is consumed by x24 directly and by
     * x100's recall audit — computed once per (session, dataset, params)
@@ -680,7 +665,7 @@ object Similarity {
 
   def embeddingNearDup(s: SparkSession, dir: String, threshold: Double = 0.4,
       blockSize: Int = 1024): DataFrame =
-    nearDupCache.computeIfAbsent((s, dir, threshold, blockSize), _ =>
+    nearDupCache(s, (dir, threshold, blockSize))(
       embeddingNearDupPlan(s, dir, threshold, blockSize).pinned)
 
   private def embeddingNearDupPlan(s: SparkSession, dir: String, threshold: Double,
@@ -1208,12 +1193,10 @@ object Similarity {
   /** Corpus sizes, counted once per (session, dataset) — one
     * metadata-cheap count action feeding the geometry choice.
     */
-  private val countCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), java.lang.Long]()
+  private val countCache = SessionMemo[String, Long]("Similarity.count")
 
   def embCount(s: SparkSession, dir: String): Long =
-    countCache.computeIfAbsent((s, dir),
-      _ => t(s, dir, "embeddings").count()): Long
+    countCache(s, dir)(t(s, dir, "embeddings").count())
 
   /** Resolve `AdaptiveBits` sentinels against the corpus size; explicit
     * widths pass through untouched (specs, the x100 audit at pinned
@@ -1256,8 +1239,7 @@ object Similarity {
     * `srpBandKeysFor` (the uncached form), which streaming batches use
     * directly.
     */
-  private val keysCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]()
+  private val keysCache = SessionMemo[(String, Int, Int), DataFrame]("Similarity.keys")
 
   def srpBandKeys(s: SparkSession, dir: String,
       sketchBits: Int = AdaptiveBits, bandBits: Int = AdaptiveBits): DataFrame = {
@@ -1269,7 +1251,7 @@ object Similarity {
     // wherever these partitions sit. Without this the whole candidate
     // stage ran on 2 of 32 cores at the 10x corpus (candidate count
     // 7.0 -> 1.5 s warm, x103 end-to-end 8.8 -> 2-3 s once spread).
-    keysCache.computeIfAbsent((s, dir, sb, bb), _ =>
+    keysCache(s, (dir, sb, bb))(
       srpBandKeysFor(s, t(s, dir, "embeddings"), sb, bb)
         .repartition(s.sessionState.conf.numShufflePartitions, col("vec_id"))
         .pinned)
@@ -1318,8 +1300,8 @@ object Similarity {
     * (session, dataset, params) and checkpointed, same discipline as
     * `nearDupCache`.
     */
-  private val bandedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double, Int, Int), DataFrame]()
+  private val bandedCache =
+    SessionMemo[(String, Double, Int, Int), DataFrame]("Similarity.banded")
 
   /** Banded embedding near-dup — the 100 TB lane (the x86 discipline
     * applied to embeddings): candidates are pairs sharing at least one
@@ -1343,11 +1325,10 @@ object Similarity {
     * (x99/x57/x138/x100), cached per (session, dataset). One linear
     * hash-group over the embedding arrays.
     */
-  private val vecGroupCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val vecGroupCache = SessionMemo[String, DataFrame]("Similarity.vecGroup")
 
   private def vecGroupsAll(s: SparkSession, dir: String): DataFrame =
-    vecGroupCache.computeIfAbsent((s, dir), _ =>
+    vecGroupCache(s, dir)(
       t(s, dir, "embeddings")
         .groupBy(col("embedding"))
         .agg(min(col("vec_id")).as("rep"),
@@ -1366,12 +1347,12 @@ object Similarity {
     * same way the self-cosine does here — the collapse preserves even
     * the failure mode).
     */
-  private val repBandedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double, Int, Int), (DataFrame, DataFrame)]()
+  private val repBandedCache =
+    SessionMemo[(String, Double, Int, Int), (DataFrame, DataFrame)]("Similarity.repBanded")
 
   private def repBandedPairs(s: SparkSession, dir: String, threshold: Double,
       sb: Int, bb: Int): (DataFrame, DataFrame) =
-    repBandedCache.computeIfAbsent((s, dir, threshold, sb, bb), _ => {
+    repBandedCache(s, (dir, threshold, sb, bb)) {
       val groups = vecGroupsAll(s, dir)
       val keys = srpBandKeys(s, dir, sb, bb)
         .join(groups.select(col("rep").as("vec_id")), Seq("vec_id"), "left_semi")
@@ -1392,7 +1373,7 @@ object Similarity {
             .as("cosine"))
         .filter(col("cosine") >= threshold)
       (pairs.pinned, selfPass.pinned)
-    })
+    }
 
   def bandedNearDup(s: SparkSession, dir: String, threshold: Double = 0.4,
       sketchBits: Int = AdaptiveBits, bandBits: Int = AdaptiveBits): DataFrame = {
@@ -1403,7 +1384,7 @@ object Similarity {
     // multiplicity — cross pairs inherit the rep cosine, in-group pairs
     // the group self-cosine — and the bucket join + verify run on
     // distinct content only.
-    bandedCache.computeIfAbsent((s, dir, threshold, sb, bb), _ => {
+    bandedCache(s, (dir, threshold, sb, bb)) {
       val (repPairs, selfPass) = repBandedPairs(s, dir, threshold, sb, bb)
       val groups = vecGroupsAll(s, dir)
       val memA = groups.select(col("rep").as("vec_a"),
@@ -1421,7 +1402,7 @@ object Similarity {
       cross.unionByName(inGroup)
         .orderBy(col("cosine").desc, col("vec_a"), col("vec_b"))
         .pinned
-    })
+    }
   }
 
   /** (vec_id, lbl) near-dup cluster labels of the banded lane at REP
@@ -1573,12 +1554,11 @@ object Similarity {
     * histMax). The collapse domain of the incremental lanes' r19
     * rework.
     */
-  private val incrGroupCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
+  private val incrGroupCache = SessionMemo[(String, Int), DataFrame]("Similarity.incrGroup")
 
   private def incrVecGroups(s: SparkSession, dir: String,
       histMax: Int): DataFrame =
-    incrGroupCache.computeIfAbsent((s, dir, histMax), _ =>
+    incrGroupCache(s, (dir, histMax))(
       t(s, dir, "embeddings").filter(col("vec_id") >= histMax)
         .groupBy(col("embedding"))
         .agg(min(col("vec_id")).as("irep"),
@@ -2176,12 +2156,11 @@ object Similarity {
     * grid-scale λ, grid-scale trace). Cached per (session, dataset,
     * iters) — x185 and x186 read one computation.
     */
-  private val pcCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (Array[Double], Double, Long)]()
+  private val pcCache = SessionMemo[(String, Int), (Array[Double], Double, Long)]("Similarity.pc")
 
   private def pcCore(s: SparkSession, dir: String,
       iters: Int): (Array[Double], Double, Long) =
-    pcCache.computeIfAbsent((s, dir, iters), _ => {
+    pcCache(s, (dir, iters)) {
       val cells = t(s, dir, "embeddings")
         .select(transform(col("embedding"),
           v => floor(v.cast(DoubleType) * lit(1048576.0))).as("qa"))
@@ -2220,7 +2199,7 @@ object Similarity {
         it += 1
       }
       (v, lambda, trace)
-    })
+    }
 
   /** x186: the projection the component exists FOR — every vector's
     * coordinate along the top principal direction (the 1-D embedding a

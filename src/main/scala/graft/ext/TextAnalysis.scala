@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Text-analysis operators for LLM training-data pipelines over the
@@ -66,31 +66,16 @@ object TextAnalysis {
     * bigram grain, paid once per consumer without the memo. Values are
     * pinned doc-grain frames (a few narrow columns per document — MBs
     * at sf0.1, low GBs at a 100 TB corpus fraction of distinct docs),
-    * keyed by (session, dir). The reset seam makes an in-session corpus
-    * rewrite observable (the SuffixDedup.resetSessionCaches /
-    * Sketches.resetElementCache contract).
+    * keyed by (session, dir, leg). Leg builds nest (the x63 build
+    * consumes the cached x54 leg), which the seam allows.
+    * [[graft.engine.SessionMemo.reset]] makes an in-session corpus
+    * rewrite observable.
     */
-  private val legCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+  private val legCache = SessionMemo[(String, String), DataFrame]("TextAnalysis.leg")
 
-  private[graft] def resetSessionCaches(): Unit = legCache.clear()
-
-  /** get/putIfAbsent rather than computeIfAbsent: leg builds NEST (the
-    * x63 build consumes the cached x54 leg), and a nested computeIfAbsent
-    * on one ConcurrentHashMap can deadlock on a shared bin. The race is
-    * benign — a duplicate build pins twice, both frames identical.
-    */
   private def cachedLeg(s: SparkSession, dir: String, key: String)
-      (build: => DataFrame): DataFrame = {
-    val k = (s, dir, key)
-    val hit = legCache.get(k)
-    if (hit != null) hit
-    else {
-      val built = build.pinned
-      val prev = legCache.putIfAbsent(k, built)
-      if (prev != null) prev else built
-    }
-  }
+      (build: => DataFrame): DataFrame =
+    legCache(s, (dir, key))(build.pinned)
 
   /** The four curation counters in ONE native code-point scan
     * ([[graft.functions.QualityCounts]]) — the r20-seed fix for the
@@ -449,12 +434,11 @@ object TextAnalysis {
   /** x101/x102 share one training run per (session, dataset, rounds):
     * (ordered merge table, vocab with every merge applied).
     */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), (DataFrame, DataFrame)]()
+  private val bpeCache = SessionMemo[(String, Int), (DataFrame, DataFrame)]("TextAnalysis.bpe")
 
   private def bpeTrain(s: SparkSession, dir: String,
       rounds: Int): (DataFrame, DataFrame) =
-    bpeCache.computeIfAbsent((s, dir, rounds), _ => {
+    bpeCache(s, (dir, rounds)) {
       var words = t(s, dir, "documents")
         .select(explode(wsTokens(lower(col("text")))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("freq"))
@@ -488,7 +472,7 @@ object TextAnalysis {
           .pinned
       }
       (merges.reduce(_ unionByName _).orderBy(col("merge_rank")), words)
-    })
+    }
 
   /** BPE ENCODING report — what applying the trained merge table buys:
     * the corpus re-tokenized under the x101 merges (every word's symbol

@@ -1,13 +1,11 @@
 package graft.ext
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Unigram-LM (SentencePiece-style) tokenizer TRAINER — the subword family's
@@ -187,13 +185,11 @@ object UnigramLm {
   }
 
   /** x165/x166/x167 share one training run per (session, dataset, rounds). */
-  private val cache = new ConcurrentHashMap[
-    (SparkSession, String, Int), (DataFrame, DataFrame)]()
+  private val cache = SessionMemo[(String, Int), (DataFrame, DataFrame)]("UnigramLm.cache")
 
   private def train(s: SparkSession, dir: String,
       rounds: Int = Rounds): (DataFrame, DataFrame) =
-    cache.computeIfAbsent((s, dir, rounds),
-      _ => trainFromWords(wordHistogram(s, dir), rounds))
+    cache(s, (dir, rounds))(trainFromWords(wordHistogram(s, dir), rounds))
 
   /** x165: the trained piece vocabulary — the artifact a unigram-LM
     * tokenizer ships. rank's global window is vocab-bounded

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Graph analytics beyond connected components (x47/x57): PageRank over
@@ -94,12 +94,11 @@ object Graph {
     * the PER-ITERATION rank/frontier checkpoints below go out of scope
     * and get reclaimed mid-session.
     */
-  private val edgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long, Int), DataFrame]()
+  private val edgeCache = SessionMemo[(String, Long, Int), DataFrame]("Graph.edge")
 
   private def coOrderEdges(s: SparkSession, dir: String, minSupport: Long,
       maxBasket: Int = MaxBasket): DataFrame =
-    edgeCache.computeIfAbsent((s, dir, minSupport, maxBasket), _ => {
+    edgeCache(s, (dir, minSupport, maxBasket)) {
       val items = cappedItems(s, dir, maxBasket)
       val a = items.select(col("l_orderkey"), col("l_partkey").as("pa"))
       val b = items.select(col("l_orderkey"), col("l_partkey").as("pb"))
@@ -111,7 +110,7 @@ object Graph {
       pairs.select(col("pa").as("src"), col("pb").as("dst"))
         .unionByName(pairs.select(col("pb").as("src"), col("pa").as("dst")))
         .pinned
-    })
+    }
 
   /** Part co-order PageRank: `iters` fixed iterations at damping 0.85.
     * The edge list and degrees are eagerly `localCheckpoint`ed so no

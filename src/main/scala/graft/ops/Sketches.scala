@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Sketch/approximate aggregates — the cardinality and quantile shapes
@@ -220,8 +220,7 @@ object Sketches {
       .orderBy(col("i"))
   }
 
-  private val cmsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), DataFrame]()
+  private val cmsCache = SessionMemo[(String, Int, Int), DataFrame]("Sketches.cms")
 
   /** The CMS inner-product rows both q81 forms share: one scan per
     * side, depth·width keyed counts on the shuffle, a 768-row join —
@@ -231,8 +230,7 @@ object Sketches {
     */
   private def cmsJoinSketch(s: SparkSession, dir: String,
       depth: Int, width: Int): DataFrame =
-    cmsCache.computeIfAbsent((s, dir, depth, width),
-      _ => cmsJoinSketchBuild(s, dir, depth, width))
+    cmsCache(s, (dir, depth, width))(cmsJoinSketchBuild(s, dir, depth, width))
 
   private def cmsJoinSketchBuild(s: SparkSession, dir: String,
       depth: Int, width: Int): DataFrame = {
@@ -586,8 +584,7 @@ object Sketches {
   // private[ops]: the artifact spec observes WHICH frame a cold
   // consumer resolved (the overlap result's lineage is checkpoint-cut,
   // so inputFiles must be read off the cached element frame itself)
-  private[ops] val elCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
+  private[ops] val elCache = SessionMemo[(String, Int), DataFrame]("Sketches.el")
 
   /** The distinct (source, md5-60-bit shingle hash) element frame over
     * the first `numSources` sources — the lane's expensive build (corpus
@@ -613,31 +610,26 @@ object Sketches {
       .distinct()
   }
 
-  /** Publish-time ensure for the element artifact — Bench/RunOne call
-    * this in the amortized-setup block, next to `ensureSa`. Returns the
+  /** Publish-time ensure for the element artifact — part of
+    * [[graft.Bench.ensureArtifacts]], next to `ensureSa`. Returns the
     * committed version.
     */
   def ensureKmvElements(s: SparkSession, dir: String,
       numSources: Int = 6): Long = {
     val v = graft.engine.CorpusArtifact.ensure(s, dir,
       kmvElementName(numSources))(kmvElementsBuild(s, dir, numSources))
-    elCache.put((s, dir, numSources),
+    elCache.put(s, (dir, numSources),
       graft.engine.CorpusArtifact.resolve(s, dir,
         kmvElementName(numSources)).get): Unit
     v
   }
-
-  /** Spec seam: drop the in-session element cache so artifact reads are
-    * observable.
-    */
-  private[graft] def resetElementCache(): Unit = elCache.clear()
 
   def bottomkOverlap(s: SparkSession, dir: String, numSources: Int = 6,
       k: Int = 128, withAnchor: Boolean = true): DataFrame = {
     // resolution order: L1 session cache, committed artifact for this
     // corpus state, in-session build (checkpointed — the audit and
     // served registrations share one materialization either way)
-    val el = elCache.computeIfAbsent((s, dir, numSources), _ =>
+    val el = elCache(s, (dir, numSources))(
       graft.engine.CorpusArtifact.resolve(s, dir, kmvElementName(numSources))
         .getOrElse(kmvElementsBuild(s, dir, numSources).pinned))
     bottomkPairs(el, k, withAnchor)

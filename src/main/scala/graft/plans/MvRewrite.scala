@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Proj
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import graft.engine.SessionMemo
 import graft.engine.Pin.PinOps
 
 /** Materialized-view substitution: an optimizer rule that rewrites an
@@ -144,13 +145,13 @@ object MvRewrite extends Rule[LogicalPlan] {
   */
 object MvQueries {
 
-  private val mvCache = new ConcurrentHashMap[(SparkSession, String), String]()
+  private val mvCache = SessionMemo[String, String]("MvQueries.mv")
 
   /** Build + publish the MV; returns its path. Decimal partials make
     * the rollup associative-exact (the money discipline).
     */
   def ensureMv(s: SparkSession, dir: String): String =
-    mvCache.computeIfAbsent((s, dir), _ => {
+    mvCache(s, dir) {
       val path = java.nio.file.Files.createTempDirectory("graft_mv").toString + "/lineitem_mv"
       graft.engine.Tables(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_linestatus"),
@@ -165,7 +166,7 @@ object MvQueries {
           count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(path)
       path
-    })
+    }
 
   /** The standard aggregate a user writes — no MV awareness in the
     * query text. Column types are pinned decimal so the rollup is

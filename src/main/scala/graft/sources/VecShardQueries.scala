@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 
 /** Driver-graded queries over the `vecshard` connector. The shard
   * directory is the embeddings table written ONCE per (session, dataset)
@@ -12,18 +12,17 @@ import graft.engine.Tables
   */
 object VecShardQueries {
 
-  private val rootCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
+  private val rootCache = SessionMemo[String, String]("VecShardQueries.root")
 
   private def shardRoot(s: SparkSession, dir: String): String =
-    rootCache.computeIfAbsent((s, dir), _ => {
+    rootCache(s, dir) {
       val d = java.nio.file.Files.createTempDirectory("graft_vecshard_x170").toString
       VecShard.writeShards(
         Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
           .repartitionByRange(4, col("vec_id")),
         d)
       d
-    })
+    }
 
   /** x170: COUNT/MIN/MAX over the shard directory, answered by the
     * connector's `SupportsPushDownAggregates` path — per-shard partial

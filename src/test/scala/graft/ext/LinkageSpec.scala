@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
+import graft.engine.SessionMemo
 import org.apache.spark.sql.functions.col
 
 /** x190/x191 entity-resolution lane: the similarity join must equal a
@@ -86,7 +87,7 @@ class LinkageSpec extends SparkSpec {
     assert(again === pairs)
   }
 
-  test("rep-pair memo: corpus rewrite + resetSessionCaches serves the new corpus") {
+  test("rep-pair memo: corpus rewrite + SessionMemo.reset serves the new corpus") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_edmemo").toString
     Seq((1L, "alphabeta"), (2L, "alphabetx"))
@@ -98,7 +99,7 @@ class LinkageSpec extends SparkSpec {
     Seq((1L, "alphabeta"), (2L, "alphabetx"), (3L, "alphabetz"))
       .toDF("c_custkey", "c_name").write.mode("overwrite")
       .parquet(s"$dir/customer.parquet")
-    Linkage.resetSessionCaches()
+    SessionMemo.reset()
     assert(Linkage.edSimJoin(spark, dir).count() === 3L)
   }
 

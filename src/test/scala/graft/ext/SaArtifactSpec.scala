@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
-import graft.engine.VersionedTable
+import graft.engine.{SessionMemo, VersionedTable}
 
 /** The persisted suffix-array artifact (round-17 scale fix): the SA cold
   * build is the suite's one super-linear term, so [[SuffixDedup.ensureSa]]
@@ -35,7 +35,7 @@ class SaArtifactSpec extends SparkSpec {
         case Some(p) => sys.props("graft.sa.root") = p
         case None => sys.props.remove("graft.sa.root"): Unit
       }
-      SuffixDedup.resetSessionCaches()
+      SessionMemo.reset()
     }
   }
 
@@ -54,13 +54,13 @@ class SaArtifactSpec extends SparkSpec {
       val dir = plant(docs)
       // in-session build first (no artifact yet — suffixArray must build)
       val built = saRows(dir)
-      SuffixDedup.resetSessionCaches()
+      SessionMemo.reset()
       val v = SuffixDedup.ensureSa(spark, dir)
       val root = SuffixDedup.saArtifactRoot(spark, dir)
       assert(VersionedTable.versions(spark, root) == Seq(v))
       // a consumer with cold session caches resolves the ARTIFACT: its
       // plan scans the artifact root, not a rebuild of the token frame
-      SuffixDedup.resetSessionCaches()
+      SessionMemo.reset()
       val dump = SuffixDedup.suffixArrayDump(spark, dir)
       val inputs = dump.inputFiles.toSeq
       assert(inputs.nonEmpty && inputs.forall(_.contains(
@@ -69,7 +69,7 @@ class SaArtifactSpec extends SparkSpec {
       assert(dump.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq == built, "artifact read-back must bitwise equal the build")
       // idempotent: a second ensure (fresh caches) publishes nothing new
-      SuffixDedup.resetSessionCaches()
+      SessionMemo.reset()
       assert(SuffixDedup.ensureSa(spark, dir) == v)
       assert(VersionedTable.versions(spark, root) == Seq(v))
     }
@@ -82,7 +82,7 @@ class SaArtifactSpec extends SparkSpec {
         .collect().map(_.toSeq).toSeq
       val scrubBuilt = SuffixDedup.exactSubstrScrub(spark, dir, L = 4)
         .collect().map(_.toSeq).toSeq
-      SuffixDedup.resetSessionCaches()
+      SessionMemo.reset()
       SuffixDedup.ensureSa(spark, dir): Unit
       assert(SuffixDedup.exactSubstrSpans(spark, dir, L = 4)
         .collect().map(_.toSeq).toSeq == spansBuilt)
@@ -103,7 +103,7 @@ class SaArtifactSpec extends SparkSpec {
       val docs2 = docs.take(2) :+ ((5L, "m n o p"))
       docs2.toDF("doc_id", "text").write
         .mode("overwrite").parquet(s"$dir/documents.parquet")
-      SuffixDedup.resetSessionCaches()
+      SessionMemo.reset()
       val fp2 = SuffixDedup.corpusFingerprint(spark, dir)
       assert(fp2 != fp1, "rewritten corpus must change the fingerprint")
       val root2 = SuffixDedup.saArtifactRoot(spark, dir)

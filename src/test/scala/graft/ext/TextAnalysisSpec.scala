@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.engine.SessionMemo
 
 /** Contracts for the corpus-scoring operators whose oracle twins only
   * check end-to-end equality: the quality gate's percentile semantics and
@@ -386,7 +387,7 @@ class TextAnalysisSpec extends SparkSpec {
       docs.map { case (id, text, lang) => (id, text, lang, "web", text.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    TextAnalysis.resetSessionCaches()
+    SessionMemo.reset()
     write(Seq(
       (1L, "the cat sat on the mat and the cat slept", "en"),
       (2L, "the dog sat on the mat and the dog slept", "en"),
@@ -404,7 +405,7 @@ class TextAnalysisSpec extends SparkSpec {
     assert(TextAnalysis.langId(spark, dir)
       .select("lang_detected").as[String].collect().toSet === Set("en"))
     // ...until the reset seam clears it (the SuffixDedup/Sketches contract)
-    TextAnalysis.resetSessionCaches()
+    SessionMemo.reset()
     val fresh = TextAnalysis.lmQualityFilter(spark, dir)
     assert(fresh.count() === 2L)
     assert(fresh.select("doc_id").as[Long].collect().toSet === Set(10L, 11L))

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.engine.{CorpusArtifact, VersionedTable}
+import graft.engine.{CorpusArtifact, SessionMemo, VersionedTable}
 
 /** The persisted KMV element artifact (round-19): the (source, md5
   * shingle hash) frame is a pure function of the corpus and the lane's
@@ -32,7 +32,7 @@ class KmvElementArtifactSpec extends SparkSpec {
         case Some(p) => sys.props("graft.sa.root") = p
         case None => sys.props.remove("graft.sa.root"): Unit
       }
-      Sketches.resetElementCache()
+      SessionMemo.reset()
     }
   }
 
@@ -51,21 +51,21 @@ class KmvElementArtifactSpec extends SparkSpec {
       // in-session build first (no artifact yet)
       val built = Sketches.bottomkOverlap(spark, dir, numSources = 3)
         .collect().map(_.toSeq).toSeq
-      Sketches.resetElementCache()
+      SessionMemo.reset()
       val v = Sketches.ensureKmvElements(spark, dir, numSources = 3)
       val root = CorpusArtifact.root(spark, dir, "kmvel3")
       assert(VersionedTable.versions(spark, root) == Seq(v))
       // idempotent: a second ensure publishes nothing new
-      Sketches.resetElementCache()
+      SessionMemo.reset()
       assert(Sketches.ensureKmvElements(spark, dir, numSources = 3) == v)
       assert(VersionedTable.versions(spark, root) == Seq(v))
       // a cold consumer resolves the ARTIFACT (the element frame it
       // caches scans the artifact root — the overlap result's own
       // lineage is checkpoint-cut, so probe the cached frame)
-      Sketches.resetElementCache()
+      SessionMemo.reset()
       Sketches.bottomkOverlap(spark, dir, numSources = 3,
         withAnchor = false).collect(): Unit
-      val el = Sketches.elCache.get((spark, dir, 3))
+      val el = Sketches.elCache.get(spark, (dir, 3)).orNull
       assert(el != null, "cold consumer must populate the element cache")
       val inputs = el.inputFiles.toSeq
       assert(inputs.nonEmpty &&
@@ -88,7 +88,7 @@ class KmvElementArtifactSpec extends SparkSpec {
       (docs :+ ((5L, toks("e", 8), "src1")))
         .toDF("doc_id", "text", "source").write
         .mode("overwrite").parquet(s"$dir/documents.parquet")
-      Sketches.resetElementCache()
+      SessionMemo.reset()
       val root2 = CorpusArtifact.root(spark, dir, "kmvel3")
       assert(root2 != root1, "rewritten corpus must change the artifact root")
       Sketches.ensureKmvElements(spark, dir, numSources = 3): Unit
