@@ -3,11 +3,11 @@
 per-decade table inputs.
 
 Bench prints one `[bench N/TOTAL] name seconds` line per query as it
-completes (added r17 so a multi-hour large-corpus suite that is cut off
-at a deadline still leaves a complete record up to the cut). This tool
-turns that log into: completed count, timed total, top-K, the
-output-bound split, and growth ratios against reference ledger lines
-(e.g. the 10x decade or the sf0.1 record).
+completes, or `[bench N/TOTAL] name FAILED` (added r17 so a multi-hour
+suite cut off at a deadline still leaves a complete record up to the
+cut). This tool turns that log into: completed count, failed queries,
+timed total, top-K, the output-bound split, and growth ratios against
+reference ledger lines (e.g. the 10x decade or the sf0.1 record).
 
 Usage:
   bench_stderr_report.py <stderr-log> [--ledger BENCH_detail.jsonl]
@@ -41,22 +41,25 @@ ap.add_argument("--ref-dir2", default=None,
 ap.add_argument("--top", type=int, default=15)
 args = ap.parse_args()
 
-pat = re.compile(r"^\[bench\s+(\d+)/(\d+)\] (\S+) ([0-9.]+) s")
+pat = re.compile(r"^\[bench\s+(\d+)/(\d+)\] (\S+) (?:([0-9.]+) s|FAILED)")
 # RunOne resume lines: "[name] run 1: 12.345 s (N rows)" — the r17 OOM
 # recovery path (the suite resumed under graft.RunOne in batches).
 pat_runone = re.compile(r"^\[(\S+)\] run \d+: ([0-9.]+) s")
-times, total_q = {}, None
+times, failed, total_q = {}, set(), None
 for path in args.log.split(","):
     for line in open(path, errors="replace"):
         m = pat.match(line)
         if m:
+            total_q = int(m.group(2))
+            if m.group(4) is None:
+                failed.add(m.group(3))
+                continue
             # min across sources if a query appears twice (same rule as
             # the RunOne branch below — merged value must not depend on
             # the order log paths are passed)
             prev = times.get(m.group(3))
             v = float(m.group(4))
             times[m.group(3)] = v if prev is None else min(prev, v)
-            total_q = int(m.group(2))
             continue
         m = pat_runone.match(line)
         if m:
@@ -84,12 +87,13 @@ def ledger_line(data_dir):
 ref = ledger_line(args.ref_dir)
 ref2 = ledger_line(args.ref_dir2)
 
-done = len(times)
+done = len(times.keys() | failed)
 total = sum(times.values())
 ob = {k: v for k, v in times.items() if k in OUTPUT_BOUND}
-print(f"completed {done}/{total_q if total_q is not None else len(times)}"
+print(f"completed {done}/{total_q if total_q is not None else done}"
       f"  timed-total {total:.1f} s "
       f"({total/60:.1f} min)")
+print(f"failed {len(failed)}: {', '.join(sorted(failed)) or '-'}")
 print(f"output-bound lanes present: {len(ob)}  sum {sum(ob.values()):.1f} s")
 print(f"total minus output-bound:   {total - sum(ob.values()):.1f} s")
 hdr = f"{'query':42s} {'sec':>9s}"

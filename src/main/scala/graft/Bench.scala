@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Benchmark main: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR.
   *
@@ -30,61 +30,79 @@ object Bench {
     dirs.foreach(graft.ops.Sketches.ensureKmvElements(spark, _))
   }
 
+  /** The sf0.001 sibling of `sfDir` if there is one, else `sfDir`. */
+  def warmDir(sfDir: String): String = {
+    val p = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
+    if (java.nio.file.Files.isDirectory(p)) p.toString else sfDir
+  }
+
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One materializing run of `fn` at `dir`: its seconds and rows, or
+    * None when it throws — a run that throws has no time. The throw is
+    * reported on stderr.
+    */
+  def timeRun(spark: SparkSession, name: String, fn: Query, dir: String): Option[(Double, Long)] = {
+    val t0 = System.nanoTime()
+    try {
+      val n = fn(spark, dir).queryExecution.toRdd.count()
+      Some(((System.nanoTime() - t0) / 1e9, n))
+    } catch { case e: Throwable =>
+      System.err.println(s"[$name] run at $dir failed: $e")
+      None
+    }
+  }
+
+  /** Each timed query's seconds (the min with its rerun), and the failed
+    * queries: a timed run or the rerun threw (None). */
+  def settle(results: Seq[(String, Option[Double])],
+      reruns: Map[String, Option[Double]]): (Map[String, Double], Seq[String]) = {
+    val best = results.map { case (n, v) =>
+      n -> reruns.get(n).fold(v)(r => for (a <- v; b <- r) yield math.min(a, b)) }
+    (best.collect { case (n, Some(v)) => n -> v }.toMap,
+      best.collect { case (n, None) => n })
+  }
+
+  /** The per-query detail line and the total line, which must fit the
+    * driver's 2000-char stdout tail (minus sbt's "[success] ..." line):
+    * the total, the failed names and the slowest 30 queries only. */
+  def summaryLines(sfDir: String, timed: Map[String, Double],
+      reruns: Map[String, Option[Double]], failed: Seq[String]): (String, String) = {
+    def fmt(v: Double): String = f"$v%.3f"
+    def q(s: String): String = "\"" + s + "\""
+    val detail = timed.toSeq.sortBy(-_._2).map { case (k, v) => q(k) + ":" + fmt(v) }
+    val rr = reruns.toSeq.sortBy(_._1)
+      .collect { case (k, Some(v)) => q(k) + ":" + fmt(v) }.mkString("{", ",", "}")
+    (s"""{"metric":"detail","n_queries":${timed.size},"queries":${detail.mkString("{", ",", "}")}}""",
+      s"""{"metric":"total","value":${fmt(timed.values.sum)},"unit":"sec","n_queries":${timed.size},""" +
+        s""""failed":${failed.map(q).mkString("[", ",", "]")},"reruns":$rr,""" +
+        s""""queries":${detail.take(30).mkString("{", ",", "}")},"sf":"$sfDir"}""")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default matches the driver's local[32] (and RunOne): a lower-core
     // debug run must be EXPLICIT, because its numbers are not comparable
     // (parallelism-bound queries run ~2x slower at local[4])
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val warmDir = {
-      val p = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")
-      if (java.nio.file.Files.isDirectory(p)) p.toString else sfDir
-    }
-    // r19 optimization round, guide §9 (config last, and parameterized):
-    // - codegen.cache.maxEntries (static conf, default 100): a 300-query
-    //   suite holds far more than 100 generated classes, so the default
-    //   recompiles most of every query's codegen units on every
-    //   invocation (measured: x143 re-janinos 68 classes per run at the
-    //   default, 0-10 with the cache sized to the workload). The same
-    //   sizing is right for any long-running multi-query service; it
-    //   trades bounded driver memory (generated classes are KB-scale)
-    //   for not re-running janino.
-    // - AQE coalescing minPartitionSize: kept at Spark's 1m default
-    //   after a full-suite A/B — a 64k floor parallelized the few
-    //   CPU-dense byte-small reduce stages (q29 2.1 s → 0.9 s) but cost
-    //   more across the many ITERATIVE lanes (pagerank/CC/k-core rounds
-    //   each gained tasks: +0.5–1.4 s on 8 lanes; suite 187.8 s at 64k
-    //   vs 185.9 s at 1m). Env-overridable for re-measurement.
-    val cgCache = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000")
-    val aqeMinPart = sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", cgCache)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", aqeMinPart)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try {
-      ensureArtifacts(spark, Seq(warmDir, sfDir))
-      // store hygiene, same posture as bench_frozen.sh's scratch sweep:
-      // retire artifact roots no live corpus resolves (superseded
-      // fingerprints of rewritten corpora — ~292 MB/round at 100x),
-      // age-gated so a concurrent batch's fresh builds survive. TTL in
-      // minutes via SPARK_GRAFT_ARTIFACT_TTL_MIN (default 180, <=0
-      // disables), mirroring SPARK_SWEEP_AGE_MIN.
-      val ttlMin = sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_TTL_MIN", "180").toLong
-      if (ttlMin > 0) {
+    val cpus = GraftSession.cpus(32)
+    val warmDir = Bench.warmDir(sfDir)
+    val spark = GraftSession.local("bench", cpus)
+    ensureArtifacts(spark, Seq(warmDir, sfDir))
+    // store hygiene, same posture as bench_frozen.sh's scratch sweep:
+    // retire artifact roots no live corpus resolves (superseded
+    // fingerprints of rewritten corpora — ~292 MB/round at 100x),
+    // age-gated so a concurrent batch's fresh builds survive. TTL in
+    // minutes via SPARK_GRAFT_ARTIFACT_TTL_MIN (default 180, <=0
+    // disables), mirroring SPARK_SWEEP_AGE_MIN.
+    val ttlMin = sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_TTL_MIN", "180").toLong
+    if (ttlMin > 0) {
+      try {
         val gone = graft.engine.CorpusArtifact.vacuum(
           spark, Seq(warmDir, sfDir), ttlMin * 60000L)
         if (gone.nonEmpty)
           System.err.println(s"[bench] artifact vacuum retired ${gone.size} root(s): ${gone.mkString(", ")}")
-      }
-    } catch { case _: Throwable => () }
+      } catch { case e: Throwable => System.err.println(s"[bench] artifact vacuum failed: $e") }
+    }
     // Min of REPS (default 2) timed passes per query: this box is shared,
     // and single-pass numbers have recorded spurious 20-40 s outliers three
     // rounds running (r04 x24, r05 x58, r06 x11/q05/q29/x13 — all 1-3 s on
@@ -108,20 +126,15 @@ object Bench {
     // per-query progress on stderr (stdout stays the two parseable JSON
     // lines): a multi-hour large-corpus suite that dies or is cut off at
     // a deadline still leaves a complete per-query record up to the cut
-    var done = 0
-    val nq = SparkEntry.queries.size
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      try fn(spark, warmDir).queryExecution.toRdd.count()
-      catch { case _: Throwable => () }
+    val queries = SparkEntry.queries
+    val results = queries.toSeq.zipWithIndex.map { case ((name, fn), i) =>
+      timeRun(spark, name, fn, warmDir) // warm-up: a throw is not fatal
       gcIfPressured()
-      val best = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.min
-      done += 1
-      System.err.println(f"[bench $done%3d/$nq] $name $best%.3f s")
+      // the first pass that throws fails the query and ends its passes
+      val best = (1 to reps).foldLeft(Option(Double.PositiveInfinity)) {
+        (acc, _) => acc.flatMap(a => timeRun(spark, name, fn, sfDir).map(r => math.min(a, r._1))) }
+      System.err.println(f"[bench ${i + 1}%3d/${queries.size}] $name " +
+        best.fold("FAILED")(b => f"$b%.3f s"))
       name -> best
     }
     // Contention auto-rerun (the recurring shared-host phantom — r04 x24,
@@ -140,33 +153,19 @@ object Bench {
       try java.nio.file.Paths.get(sfDir).toRealPath().toString
       catch { case _: Throwable => sfDir }
     val stats = BenchLedger.stats(java.nio.file.Paths.get("."), sfName(sfDir),
-      cpus.toInt, Some(dataDir))
-    val reruns: Map[String, Double] = results.toSeq.flatMap { case (name, v) =>
-      if (BenchLedger.needsRerun(v, stats.get(name))) {
-        val t0 = System.nanoTime()
-        try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
-        Some(name -> (System.nanoTime() - t0) / 1e9)
-      } else None
+      cpus, Some(dataDir))
+    val reruns = results.collect {
+      case (name, Some(v)) if BenchLedger.needsRerun(v, stats.get(name)) =>
+        name -> timeRun(spark, name, queries(name), sfDir).map(_._1)
     }.toMap
-    val finalResults = results.map { case (n, v) =>
-      n -> math.min(v, reruns.getOrElse(n, v)) }
-    def fmt(v: Double): String = f"$v%.3f"
-    val total = if (finalResults.nonEmpty) finalResults.values.sum else 0.0
-    // Full per-query detail on its own line (humans + BASELINE.md); the
-    // FINAL line must fit the driver's 2000-char stdout tail (minus sbt's
-    // trailing "[success] ..." line), so it carries the total plus the
-    // slowest 30 queries only.
-    val detail = finalResults.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-    println(s"""{"metric":"detail","n_queries":${finalResults.size},"queries":${detail.mkString("{", ",", "}")}}""")
-    val top = detail.take(30).mkString("{", ",", "}")
-    val rr = reruns.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${finalResults.size},"reruns":$rr,"queries":$top,"sf":"$sfDir"}""")
-    BenchLedger.append(java.nio.file.Paths.get("."), sfName(sfDir), cpus.toInt,
-      finalResults, Some(dataDir))
+    val (timedResults, failed) = settle(results, reruns)
+    val (detail, total) = summaryLines(sfDir, timedResults, reruns, failed)
+    println(detail)
+    println(total)
+    BenchLedger.append(java.nio.file.Paths.get("."), sfName(sfDir), cpus,
+      timedResults, Some(dataDir))
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 
   private def sfName(sfDir: String): String =

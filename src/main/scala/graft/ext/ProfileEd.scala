@@ -1,22 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch profiler for the x218 fold decomposition (r20 measurement). */
 object ProfileEd {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_prof_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("prof", 32)
     val dir = "/root/testdata/sf0.1"
+    val warmDir = graft.Bench.warmDir(dir)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stageMs = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -59,8 +50,7 @@ object ProfileEd {
     if (args.nonEmpty) {
       args.foreach { nm =>
         val fn = graft.SparkEntry.queries(nm)
-        try fn(spark, "/root/testdata/sf0.001").queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
+        graft.Bench.timeRun(spark, nm, fn, warmDir)
         timeIt(s"$nm run1") { fn(spark, dir).queryExecution.toRdd.count() }
         timeIt(s"$nm run2") { fn(spark, dir).queryExecution.toRdd.count() }
       }
@@ -68,7 +58,7 @@ object ProfileEd {
       return
     }
     timeIt("warm x218 sf0.001") {
-      Linkage.edClustersIncremental(spark, "/root/testdata/sf0.001")
+      Linkage.edClustersIncremental(spark, warmDir)
         .queryExecution.toRdd.count()
     }
     timeIt("x218 full") {

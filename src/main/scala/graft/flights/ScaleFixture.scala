@@ -174,16 +174,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val wh = if (args.nonEmpty) args(0)
       else java.nio.file.Files.createTempDirectory("graft_scalebench").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_scalebench_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("scalebench", graft.GraftSession.cpus(32))
     def timed(name: String)(f: => Long): Double = {
       val t0 = System.nanoTime()
       val n = f

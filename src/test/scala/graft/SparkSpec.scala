@@ -20,16 +20,8 @@ trait SparkSpec extends AnyFunSuite {
     */
   val Sf: String = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .appName("graft-spec")
-    .getOrCreate()
+  // fixed, not SPARK_GRAFT_CPUS, which the test run sets to the host's cores
+  lazy val spark: SparkSession = GraftSession.local("spec", 4)
 }
 
 object SparkSpec {

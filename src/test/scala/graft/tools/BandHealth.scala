@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+package tools
 
 /** Dev/ops utility: print the banded embedding lane's index-health
   * numbers for an sf dir — corpus size, the adaptive geometry chosen
@@ -9,23 +9,13 @@ import org.apache.spark.sql.SparkSession
   * BASELINE.md's candidate-growth table: fixed-width bands grow the
   * verify volume ~n^2/2^(bandBits+1) per band while the adaptive width
   * holds expected bucket occupancy O(1), keeping it ~linear. Usage:
-  *   sbt "runMain graft.BandHealth /root/testdata/sf0.1 [histMax]"
+  *   sbt "Test/runMain graft.tools.BandHealth /root/testdata/sf0.1 [histMax]"
   */
 object BandHealth {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val histMax = if (args.length > 1) args(1).toInt else 400
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bandhealth_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("bandhealth", GraftSession.cpus(32))
     import ext.Similarity
     val n = Similarity.embCount(spark, sfDir)
     val (asb, abb) = Similarity.adaptiveGeometry(n)

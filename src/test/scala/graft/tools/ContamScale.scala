@@ -1,7 +1,7 @@
 package graft
+package tools
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the SELF-COMPACTING streaming contamination lane
@@ -13,24 +13,14 @@ import org.apache.spark.sql.functions._
   * equal the whole-corpus one-shot build (count + sum + bit-xor over
   * the 60-bit gram hashes).
   *
-  * Usage: runMain graft.ContamScale [sfDir] [batches] [maxLiveVersions]
+  * Usage: sbt "Test/runMain graft.tools.ContamScale [sfDir] [batches] [maxLiveVersions]"
   */
 object ContamScale {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/sf10x/sf1"
     val batches = if (args.length > 1) args(1).toInt else 6
     val maxLive = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_contamscale_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("contamscale", GraftSession.cpus(32))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
