@@ -2,12 +2,17 @@
 """Summarize a graft.Bench stderr progress log into the BASELINE.md
 per-decade table inputs.
 
-Bench prints one `[bench N/TOTAL] name seconds` line per query as it
-completes, or `[bench N/TOTAL] name FAILED` (added r17 so a multi-hour
-suite cut off at a deadline still leaves a complete record up to the
-cut). This tool turns that log into: completed count, failed queries,
-timed total, top-K, the output-bound split, and growth ratios against
-reference ledger lines (e.g. the 10x decade or the sf0.1 record).
+Bench prints one `[bench N/TOTAL] name W s (cold C s)` line per query as
+it completes (W the warm min of the timed passes, C the first timed
+pass), or `[bench N/TOTAL] name FAILED` (added r17 so a multi-hour suite
+cut off at a deadline still leaves a complete record up to the cut), and
+then one `[bench rerun] name S s` (or `FAILED`) line per suite-end rerun.
+A rerun lowers the query's time to the min, and a failed rerun fails the
+query, exactly as Bench settles them, so the timed total equals the total
+line's `value`. This tool turns that log into: completed count, failed
+queries, timed (warm) and cold totals, top-K, the output-bound split, and
+growth ratios against reference ledger lines (e.g. the 10x decade or the
+sf0.1 record).
 
 Usage:
   bench_stderr_report.py <stderr-log> [--ledger BENCH_detail.jsonl]
@@ -41,13 +46,22 @@ ap.add_argument("--ref-dir2", default=None,
 ap.add_argument("--top", type=int, default=15)
 args = ap.parse_args()
 
-pat = re.compile(r"^\[bench\s+(\d+)/(\d+)\] (\S+) (?:([0-9.]+) s|FAILED)")
+pat = re.compile(r"^\[bench\s+(\d+)/(\d+)\] (\S+) (?:([0-9.]+) s(?: \(cold ([0-9.]+) s\))?|FAILED)")
+pat_rerun = re.compile(r"^\[bench rerun\] (\S+) (?:([0-9.]+) s|FAILED)")
 # RunOne resume lines: "[name] run 1: 12.345 s (N rows)" — the r17 OOM
 # recovery path (the suite resumed under graft.RunOne in batches).
 pat_runone = re.compile(r"^\[(\S+)\] run \d+: ([0-9.]+) s")
-times, failed, total_q = {}, set(), None
+times, cold, failed, total_q = {}, {}, set(), None
 for path in args.log.split(","):
     for line in open(path, errors="replace"):
+        m = pat_rerun.match(line)
+        if m:
+            if m.group(2) is None:
+                failed.add(m.group(1))
+                times.pop(m.group(1), None)
+            elif m.group(1) in times:
+                times[m.group(1)] = min(times[m.group(1)], float(m.group(2)))
+            continue
         m = pat.match(line)
         if m:
             total_q = int(m.group(2))
@@ -60,6 +74,7 @@ for path in args.log.split(","):
             prev = times.get(m.group(3))
             v = float(m.group(4))
             times[m.group(3)] = v if prev is None else min(prev, v)
+            cold[m.group(3)] = float(m.group(5) or m.group(4))
             continue
         m = pat_runone.match(line)
         if m:
@@ -91,8 +106,9 @@ done = len(times.keys() | failed)
 total = sum(times.values())
 ob = {k: v for k, v in times.items() if k in OUTPUT_BOUND}
 print(f"completed {done}/{total_q if total_q is not None else done}"
-      f"  timed-total {total:.1f} s "
-      f"({total/60:.1f} min)")
+      f"  timed-total {total:.3f} s "
+      f"({total/60:.1f} min)"
+      f"  cold-total {sum(v for k, v in cold.items() if k in times):.3f} s")
 print(f"failed {len(failed)}: {', '.join(sorted(failed)) or '-'}")
 print(f"output-bound lanes present: {len(ob)}  sum {sum(ob.values()):.1f} s")
 print(f"total minus output-bound:   {total - sum(ob.values()):.1f} s")

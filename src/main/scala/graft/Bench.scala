@@ -53,8 +53,19 @@ object Bench {
     }
   }
 
-  /** Each timed query's seconds (the min with its rerun), and the failed
-    * queries: a timed run or the rerun threw (None). */
+  /** `reps` timed passes of `fn` at `dir`: the first pass's seconds (cold:
+    * it pays every `SessionMemo` build keyed on `dir`, which the warm-up
+    * at a sibling dir cannot) and the min over all passes (warm), or None
+    * when a pass throws — the first throw ends the passes.
+    */
+  def timePasses(spark: SparkSession, name: String, fn: Query, dir: String,
+      reps: Int): Option[(Double, Double)] =
+    (2 to reps).foldLeft(timeRun(spark, name, fn, dir).map(r => (r._1, r._1))) {
+      (acc, _) => acc.flatMap { case (cold, warm) =>
+        timeRun(spark, name, fn, dir).map(r => (cold, math.min(warm, r._1))) } }
+
+  /** Each timed query's warm seconds (the min with its rerun), and the
+    * failed queries: a timed run or the rerun threw (None). */
   def settle(results: Seq[(String, Option[Double])],
       reruns: Map[String, Option[Double]]): (Map[String, Double], Seq[String]) = {
     val best = results.map { case (n, v) =>
@@ -65,17 +76,23 @@ object Bench {
 
   /** The per-query detail line and the total line, which must fit the
     * driver's 2000-char stdout tail (minus sbt's "[success] ..." line):
-    * the total, the failed names and the slowest 30 queries only. */
+    * the warm total (`value`), the failed names, the reruns, the cold
+    * total (a query with no `cold` entry counts its warm time) and the
+    * slowest 30 queries only. Totals add the per-query times as printed
+    * (ms), so the progress log sums to them exactly. */
   def summaryLines(sfDir: String, timed: Map[String, Double],
-      reruns: Map[String, Option[Double]], failed: Seq[String]): (String, String) = {
+      reruns: Map[String, Option[Double]], failed: Seq[String],
+      cold: Map[String, Double] = Map.empty): (String, String) = {
     def fmt(v: Double): String = f"$v%.3f"
+    def sum(vs: Iterable[Double]): String = fmt(vs.map(v => BigDecimal(fmt(v))).sum.toDouble)
     def q(s: String): String = "\"" + s + "\""
     val detail = timed.toSeq.sortBy(-_._2).map { case (k, v) => q(k) + ":" + fmt(v) }
     val rr = reruns.toSeq.sortBy(_._1)
       .collect { case (k, Some(v)) => q(k) + ":" + fmt(v) }.mkString("{", ",", "}")
     (s"""{"metric":"detail","n_queries":${timed.size},"queries":${detail.mkString("{", ",", "}")}}""",
-      s"""{"metric":"total","value":${fmt(timed.values.sum)},"unit":"sec","n_queries":${timed.size},""" +
+      s"""{"metric":"total","value":${sum(timed.values)},"unit":"sec","n_queries":${timed.size},""" +
         s""""failed":${failed.map(q).mkString("[", ",", "]")},"reruns":$rr,""" +
+        s""""cold_total":${sum(timed.map { case (k, v) => cold.getOrElse(k, v) })},""" +
         s""""queries":${detail.take(30).mkString("{", ",", "}")},"sf":"$sfDir"}""")
   }
 
@@ -130,22 +147,21 @@ object Bench {
     val results = queries.toSeq.zipWithIndex.map { case ((name, fn), i) =>
       timeRun(spark, name, fn, warmDir) // warm-up: a throw is not fatal
       gcIfPressured()
-      // the first pass that throws fails the query and ends its passes
-      val best = (1 to reps).foldLeft(Option(Double.PositiveInfinity)) {
-        (acc, _) => acc.flatMap(a => timeRun(spark, name, fn, sfDir).map(r => math.min(a, r._1))) }
+      val passes = timePasses(spark, name, fn, sfDir, reps)
       System.err.println(f"[bench ${i + 1}%3d/${queries.size}] $name " +
-        best.fold("FAILED")(b => f"$b%.3f s"))
-      name -> best
+        passes.fold("FAILED") { case (c, w) => f"$w%.3f s (cold $c%.3f s)" })
+      name -> passes
     }
     // Contention auto-rerun (the recurring shared-host phantom — r04 x24,
     // r05 x58, r06 x11, r09 q04 — automated instead of hand-adjudicated):
-    // any query whose best-of-reps exceeds its trailing-round median by
+    // any query whose warm time exceeds its trailing-round warm median by
     // the sample-aware factor (2.0x once >= 5 ledger samples exist, 2.5x
     // before — the r11 x82/x11 escapes sat at 1.9x/1.5x under a flat
     // 2.5x) gets ONE extra timed pass at suite end, after the loop's
     // allocation pressure has subsided, and the final number is the min.
     // The rerun map rides the output so the ledger shows what was
-    // re-adjudicated.
+    // re-adjudicated, and each rerun is logged on stderr so the progress
+    // log sums to the total line (scripts/bench_stderr_report.py).
     // ledger entries key on the RESOLVED data dir, not the basename: the
     // 10x and 100x scale corpora both end in ".../sf1", and cross-decade
     // medians made the rerun detector fire on nearly every query (r16)
@@ -155,15 +171,19 @@ object Bench {
     val stats = BenchLedger.stats(java.nio.file.Paths.get("."), sfName(sfDir),
       cpus, Some(dataDir))
     val reruns = results.collect {
-      case (name, Some(v)) if BenchLedger.needsRerun(v, stats.get(name)) =>
-        name -> timeRun(spark, name, queries(name), sfDir).map(_._1)
+      case (name, Some((_, warm))) if BenchLedger.needsRerun(warm, stats.get(name)) =>
+        val r = timeRun(spark, name, queries(name), sfDir).map(_._1)
+        System.err.println(s"[bench rerun] $name " + r.fold("FAILED")(v => f"$v%.3f s"))
+        name -> r
     }.toMap
-    val (timedResults, failed) = settle(results, reruns)
-    val (detail, total) = summaryLines(sfDir, timedResults, reruns, failed)
+    val (timedResults, failed) = settle(results.map { case (n, p) => n -> p.map(_._2) }, reruns)
+    val cold = results.collect {
+      case (n, Some((c, _))) if timedResults.contains(n) => n -> c }.toMap
+    val (detail, total) = summaryLines(sfDir, timedResults, reruns, failed, cold)
     println(detail)
     println(total)
     BenchLedger.append(java.nio.file.Paths.get("."), sfName(sfDir), cpus,
-      timedResults, Some(dataDir))
+      timedResults, Some(dataDir), cold)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -44,7 +44,9 @@ object BenchLedger {
     needsRerun(v, median.map(m => (m, 0)))
 
   /** Append one run's full per-query map as a single (sf, cpus,
-    * data-dir)-tagged JSON line. `dataDir` is the RESOLVED corpus
+    * data-dir)-tagged JSON line: `queries` holds the warm seconds (what
+    * [[stats]] medians), `cold` each query's first timed pass, which
+    * carries its memo builds. `dataDir` is the RESOLVED corpus
     * directory — the round-16 lesson: the 10x and 100x scale corpora
     * both end in ".../sf1", so basename-keyed entries from different
     * decades collided and a 100x run tripped the rerun detector against
@@ -52,12 +54,13 @@ object BenchLedger {
     * ledger is an optimization, never a reason to fail a bench.
     */
   def append(dir: Path, sf: String, cpus: Int, results: Map[String, Double],
-      dataDir: Option[String] = None): Unit =
+      dataDir: Option[String] = None, cold: Map[String, Double] = Map.empty): Unit =
     try {
       val dirTag = dataDir.map(d => s""""dir":"$d",""").getOrElse("")
-      val line = results.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
-        .mkString(s"""{"sf":"$sf",$dirTag"cpus":$cpus,"queries":{""", ",", "}}\n")
+      def obj(m: Map[String, Double]): String = m.toSeq.sortBy(_._1)
+        .map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+      val coldTag = if (cold.isEmpty) "" else s""","cold":${obj(cold)}"""
+      val line = s"""{"sf":"$sf",$dirTag"cpus":$cpus,"queries":${obj(results)}$coldTag}\n"""
       Files.write(dir.resolve(FileName), line.getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND): Unit

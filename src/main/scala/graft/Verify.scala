@@ -11,10 +11,13 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = GraftSession.local("verify", GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
-    // a failed query does not stop the dump; it makes the exit status 1
+    // a failed query does not stop the dump; it makes the exit status 1.
+    // An earlier run's dump goes first, so a query that throws before its
+    // write shows as missing, not as that run's result.
     val failed = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .toSeq.flatMap { case (name, fn) =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         None

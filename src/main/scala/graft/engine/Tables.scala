@@ -83,6 +83,15 @@ object Tables {
     if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
   }
 
+  /** The scan rule of the corpus lanes: `documents` and `embeddings` are
+    * bytes-small single-row-group files whose consumers amplify CPU
+    * (token/gram explodes, d^2 products), so they go through [[split]];
+    * every other table is the plain scan.
+    */
+  def splitCorpus(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "documents" || name == "embeddings") split(spark, dir, name)
+    else apply(spark, dir, name)
+
   /** Paths whose INT64 `ts` has been footer-verified as
     * TIMESTAMP(NANOS) — one footer read per path per JVM.
     */

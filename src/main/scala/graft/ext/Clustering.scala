@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
+import graft.functions.LongVec
+import graft.plans.TopKPerKey
 
 /** Clustering operators over the `embeddings` table: integer-exact Lloyd
   * k-means and (below) the product-quantization lane built on it — the
@@ -41,9 +43,7 @@ object Clustering {
 
   /** The corpus on the 2^-20 grid: (vec_id, qa: array<bigint>). */
   private[ext] def qvecs(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").select(col("vec_id"),
-      transform(col("embedding"),
-        v => floor(v.cast(DoubleType) * lit(1048576.0)).cast(LongType)).as("qa"))
+    gridVecs(t(s, dir, "embeddings"))
 
   /** Integer squared L2 distance between two grid arrays. Coordinates are
     * ≤2^20 in magnitude, diffs ≤2^21, squares ≤2^42, d=64 terms ≤2^48 —
@@ -208,7 +208,7 @@ object Clustering {
         coalesce(col("inertia"), lit(0L)).as("inertia"),
         when(col("n").isNull, lit(null).cast(DoubleType))
           .otherwise(sqrt(col("inertia").cast(DoubleType) / col("n").cast(DoubleType))
-            / lit(1048576.0)).as("rms"),
+            / LongVec.Scale).as("rms"),
         col("cent_sum"))
       .orderBy(col("cluster"))
   }
@@ -716,36 +716,11 @@ object Clustering {
       .select(explode(col("members")).as("vec_id"), col("total_qerr"))
     val corpus = repVec.join(groups.select(col("rep"), col("m")), "rep")
       .agg(sum(col("total_qerr") * col("m")).as("corpus_qerr"))
-    // two-phase global top-k: partition-local prune before the single-
-    // partition rank window sees anything (perVec is corpus-sized)
-    val local = Window.partitionBy(col("part"))
-      .orderBy(col("total_qerr").desc, col("vec_id"))
-    val w = Window.orderBy(col("total_qerr").desc, col("vec_id"))
-    perVec
-      .withColumn("part", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    // two-phase global top-k: perVec is corpus-sized
+    TopKPerKey.twoPhase(perVec, Nil, Seq(col("total_qerr").desc, col("vec_id")), k)
       .crossJoin(broadcast(corpus))
       .select(col("rank"), col("vec_id"), col("total_qerr"), col("corpus_qerr"))
       .orderBy(col("rank"))
-  }
-
-  /** Two-phase per-query top-k by ASCENDING distance (the x20 discipline
-    * flipped for distances): partition-local prune, then global rank.
-    */
-  private def topkAsc(scored: DataFrame, by: String, k: Int): DataFrame = {
-    val local = Window.partitionBy(col("query_id"), col("part"))
-      .orderBy(col(by).asc, col("vec_id"))
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col(by).asc, col("vec_id"))
-    scored.withColumn("part", spark_partition_id())
-      .withColumn("lrank", row_number().over(local))
-      .filter(col("lrank") <= k)
-      .withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= k)
-      .drop("part", "lrank")
   }
 
   /** x142: asymmetric-distance (ADC) retrieval parity — the PQ serving
@@ -778,7 +753,7 @@ object Clustering {
     val adc = enc.join(broadcast(tab), Seq("sub", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("td")).as("adc_dist"))
-    val top = topkAsc(adc, "adc_dist", k)
+    val top = TopKPerKey.twoPhase(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
     annotateWithExact(s, dir, top, numQueries, k)
       .select(col("query_id"), col("rank"), col("vec_id"),
         col("adc_dist"), col("exact_d2"), col("in_exact_topk"))
@@ -799,7 +774,8 @@ object Clustering {
       .join(qfull, Seq("sub", "j"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum((col("q") - col("qq")) * (col("q") - col("qq"))).as("exact_d2"))
-    val etop = topkAsc(exact, "exact_d2", k)
+    val etop = TopKPerKey.twoPhase(exact, Seq(col("query_id")),
+      Seq(col("exact_d2"), col("vec_id")), k)
       .select(col("query_id"), col("vec_id"), lit(1L).as("in_exact"))
     top.join(exact, Seq("query_id", "vec_id"))
       .join(etop, Seq("query_id", "vec_id"), "left")
@@ -882,9 +858,7 @@ object Clustering {
     * batches must land on the EXACT grid the index was trained on).
     */
   def gridVecs(df: DataFrame): DataFrame =
-    df.select(col("vec_id"),
-      transform(col("embedding"),
-        v => floor(v.cast(DoubleType) * lit(1048576.0)).cast(LongType)).as("qa"))
+    df.select(col("vec_id"), transform(col("embedding"), LongVec.quantize(_)).as("qa"))
 
   /** Frozen-index arrival encoding — the streaming serving lane's core:
     * nearest frozen centroid (one broadcast pass — no retrain), residual
@@ -913,7 +887,7 @@ object Clustering {
       numQueries: Int = 3, k: Int = 10): DataFrame = {
     val adc = ivfpqServe(s, dir, cents, book, codes, nprobe, numQueries)
       .select(col("query_id"), col("vec_id"), col("cluster"), col("adc_dist"))
-    topkAsc(adc, "adc_dist", k)
+    TopKPerKey.twoPhase(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cluster"),
         col("adc_dist"))
       .orderBy(col("query_id"), col("rank"))
@@ -1017,7 +991,7 @@ object Clustering {
     val rk = VersionedTable.read(s, s"$root/codes")
     val adc = ivfpqServe(s, dir, rc, rb, rk, nprobe, numQueries)
       .select(col("query_id"), col("vec_id"), col("cluster"), col("adc_dist"))
-    val top = topkAsc(adc, "adc_dist", k)
+    val top = TopKPerKey.twoPhase(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
     annotateWithExact(s, dir, top, numQueries, k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cluster"),
         col("adc_dist"), col("exact_d2"), col("in_exact_topk"))
@@ -1028,7 +1002,7 @@ object Clustering {
       numQueries: Int = 3, k: Int = 10): DataFrame = {
     val adc = ivfpqAdc(s, dir, kCoarse, nprobe, numQueries)
       .select(col("query_id"), col("vec_id"), col("cluster"), col("adc_dist"))
-    val top = topkAsc(adc, "adc_dist", k)
+    val top = TopKPerKey.twoPhase(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
     annotateWithExact(s, dir, top, numQueries, k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cluster"),
         col("adc_dist"), col("exact_d2"), col("in_exact_topk"))
@@ -1061,7 +1035,8 @@ object Clustering {
       .join(qfull, Seq("sub", "j"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum((col("q") - col("qq")) * (col("q") - col("qq"))).as("exact_d2"))
-    val etop = topkAsc(exact, "exact_d2", k)
+    val etop = TopKPerKey.twoPhase(exact, Seq(col("query_id")),
+      Seq(col("exact_d2"), col("vec_id")), k)
       .select(col("query_id"), col("vec_id"), lit(1L).as("in_exact"))
       .pinned
     // r19 optimization round (guide §1.2): one pass over the candidate
@@ -1139,7 +1114,7 @@ object Clustering {
     val cov = dm.agg(max(col("dm")).as("cov_radius_grid"))
     picked.reduce(_ union _).crossJoin(broadcast(cov))
       .select(col("round"), col("c_id").as("center_id"), col("sel_dist_grid"),
-        (sqrt(col("sel_dist_grid").cast(DoubleType)) / 1048576.0).as("sel_l2"),
+        (sqrt(col("sel_dist_grid").cast(DoubleType)) / LongVec.Scale).as("sel_l2"),
         col("cov_radius_grid"))
       .orderBy(col("round"))
   }

@@ -26,11 +26,7 @@ import graft.engine.Tables
 object Corpus {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    // documents and embeddings are bytes-small single-row-group files
-    // whose consumers amplify CPU (token/gram explodes, d^2 products) —
-    // split to >= cores; identity at production scale (Tables.split)
-    if (n == "documents" || n == "embeddings") Tables.split(s, dir, n)
-    else Tables(s, dir, n)
+    Tables.splitCorpus(s, dir, n)
 
   /** (doc_id, chunk_idx, n_chunk_tokens, chunk_hash) with fixed-size
     * token windows starting every `chunkSize - overlap` tokens; the last

@@ -26,11 +26,7 @@ import graft.engine.Pin.PinOps
 object Dedup {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    // documents and embeddings are bytes-small single-row-group files
-    // whose consumers amplify CPU (token/gram explodes, d^2 products) —
-    // split to >= cores; identity at production scale (Tables.split)
-    if (n == "documents" || n == "embeddings") Tables.split(s, dir, n)
-    else Tables(s, dir, n)
+    Tables.splitCorpus(s, dir, n)
 
   /** Distinct n-word shingles (joined by single spaces) of a token array.
     * Guarded: fewer than n tokens -> empty array (Spark's `sequence` would

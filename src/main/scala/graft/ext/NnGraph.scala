@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.engine.{SessionMemo, Tables}
+import graft.engine.SessionMemo
 import graft.engine.Pin.PinOps
+import graft.functions.LongVec
 
 /** NN-descent k-NN graph construction over the `embeddings` table — the
   * build step of graph-based ANN serving (HNSW/NSG families all start
@@ -47,24 +48,9 @@ import graft.engine.Pin.PinOps
   */
 object NnGraph {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables(s, dir, n)
-
-  /** The corpus on the 2^-20 grid: (vec_id, qa: array<bigint>). */
-  private def qvecs(s: SparkSession, dir: String): DataFrame =
-    quantized(t(s, dir, "embeddings"))
-
-  /** (vec_id, embedding) -> (vec_id, qa) on the 2^-20 grid — shared
-    * with the streaming ingest, which quantizes arriving batches the
-    * same way.
-    */
-  private[graft] def quantized(df: DataFrame): DataFrame =
-    df.select(col("vec_id"),
-      transform(col("embedding"),
-        v => floor(v.cast(DoubleType) * lit(1048576.0)).cast(LongType)).as("qa"))
-
   /** The standing-corpus grid frame of the incremental lane. */
   private[graft] def standingQ(s: SparkSession, dir: String): DataFrame =
-    qvecs(s, dir).filter(!isArrival(col("vec_id")))
+    Clustering.qvecs(s, dir).filter(!isArrival(col("vec_id")))
 
   /** Integer squared L2 on the grid — native codegen'd kernel. */
   private def sqDist(a: Column, b: Column): Column = {
@@ -108,7 +94,7 @@ object NnGraph {
   private[graft] def nnEdges(s: SparkSession, dir: String, k: Int,
       rounds: Int, buckets: Int, tag: String = "all"): DataFrame =
     graphCache(s, (dir, k, rounds, buckets, tag)) {
-      val base = qvecs(s, dir)
+      val base = Clustering.qvecs(s, dir)
       val q = (tag match {
         case "standing" => base.filter(!isArrival(col("vec_id")))
         case _ => base
@@ -169,7 +155,7 @@ object NnGraph {
         Window.partitionBy(col("src")).orderBy(col("dist"), col("nbr"))))
       .select(col("src").as("vec_id"), col("rank"), col("nbr").as("nbr_id"),
         col("dist").as("dist_grid"),
-        (sqrt(col("dist").cast(DoubleType)) / 1048576.0).as("l2"))
+        (sqrt(col("dist").cast(DoubleType)) / LongVec.Scale).as("l2"))
       .orderBy(col("vec_id"), col("rank"))
 
   /** x188: sampled recall audit of the x187 graph — the 64 pinned-hash
@@ -180,7 +166,7 @@ object NnGraph {
     */
   def nnDescentRecall(s: SparkSession, dir: String, k: Int = 6,
       rounds: Int = 4, buckets: Int = 32, sample: Int = 64): DataFrame = {
-    val q = qvecs(s, dir)
+    val q = Clustering.qvecs(s, dir)
     // The probe arrays BROADCAST (sample rows) and the truth distances
     // compute INLINE in the one corpus scan — the r17 spelling built the
     // sample·n pair frame skinny and re-joined the corpus arrays onto
@@ -246,7 +232,7 @@ object NnGraph {
 
   def rngPrune(s: SparkSession, dir: String, k: Int = 6, rounds: Int = 4,
       buckets: Int = 32): DataFrame = {
-    val q = qvecs(s, dir)
+    val q = Clustering.qvecs(s, dir)
     val e = nnEdges(s, dir, k, rounds, buckets)
     val pruned = prunedPairs(q, e).withColumn("pr", lit(1))
     e.join(pruned, Seq("src", "nbr"), "left")
@@ -314,7 +300,7 @@ object NnGraph {
     */
   def graphInsert(s: SparkSession, dir: String, k: Int = 6, rounds: Int = 4,
       buckets: Int = 32): DataFrame = {
-    val all = qvecs(s, dir)
+    val all = Clustering.qvecs(s, dir)
     val arrivals = all.filter(isArrival(col("vec_id")))
     val standingQ = all.filter(!isArrival(col("vec_id")))
     val g = nnEdges(s, dir, k, rounds, buckets, "standing")
@@ -323,7 +309,7 @@ object NnGraph {
         Window.partitionBy(col("src")).orderBy(col("dist"), col("nbr"))))
       .select(col("src").as("vec_id"), col("rank"), col("nbr").as("nbr_id"),
         col("dist").as("dist_grid"),
-        (sqrt(col("dist").cast(DoubleType)) / 1048576.0).as("l2"))
+        (sqrt(col("dist").cast(DoubleType)) / LongVec.Scale).as("l2"))
       .orderBy(col("vec_id"), col("rank"))
   }
 
@@ -346,7 +332,7 @@ object NnGraph {
     */
   def beamSearch(s: SparkSession, dir: String, k: Int = 6, rounds: Int = 4,
       buckets: Int = 32, beam: Int = 8, hops: Int = 4): DataFrame = {
-    val all = qvecs(s, dir)
+    val all = Clustering.qvecs(s, dir)
     val standing = all.filter(!isArrival(col("vec_id"))).pinned
     val queries = all.filter(isArrival(col("vec_id")))
       .select(col("vec_id").as("qid"), col("qa").as("qqa"))
@@ -380,7 +366,7 @@ object NnGraph {
       .filter(col("rank") <= k)
       .select(col("qid").as("query_id"), col("rank"), col("node").as("node_id"),
         col("dist").as("dist_grid"),
-        (sqrt(col("dist").cast(DoubleType)) / 1048576.0).as("l2"))
+        (sqrt(col("dist").cast(DoubleType)) / LongVec.Scale).as("l2"))
       .orderBy(col("query_id"), col("rank"))
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
+import graft.plans.TopKPerKey
 
 /** Retrieval operators over the `documents` + `embeddings` tables: Okapi
   * BM25 lexical search and lexical∪semantic hybrid fusion — the index-side
@@ -30,31 +31,14 @@ import graft.engine.Pin.PinOps
 object Retrieval {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    // documents and embeddings are bytes-small single-row-group files
-    // whose consumers amplify CPU (token/gram explodes, d^2 products) —
-    // split to >= cores; identity at production scale (Tables.split)
-    if (n == "documents" || n == "embeddings") Tables.split(s, dir, n)
-    else Tables(s, dir, n)
+    Tables.splitCorpus(s, dir, n)
 
   private def d(c: Column): Column = c.cast(DoubleType)
 
-  /** Two-phase per-query top-k on a (query_id, doc_id, ...) frame ranked
-    * by (`by` desc, doc_id): partition-local prune to k survivors, then
-    * the global rank — the x20 discipline, no all-candidates-one-reducer
-    * sort.
-    */
-  private def topkPerQuery(scored: DataFrame, by: String, k: Int): DataFrame = {
-    val local = Window.partitionBy(col("query_id"), col("part"))
-      .orderBy(col(by).desc, col("doc_id"))
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col(by).desc, col("doc_id"))
-    scored.withColumn("part", spark_partition_id())
-      .withColumn("lrank", row_number().over(local))
-      .filter(col("lrank") <= k)
-      .withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= k)
-      .drop("part", "lrank")
-  }
+  private val PerQuery = Seq(col("query_id"))
+
+  /** The total order of every ranking here: `by` desc, then doc_id. */
+  private def byDesc(by: String): Seq[Column] = Seq(col(by).desc, col("doc_id"))
 
   /** A BM25 inverted index as four mergeable frames — the artifact a
     * daily ingest PERSISTS next to its batch partition: `tf` and `dl`
@@ -144,7 +128,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_hit_terms"),
         aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
           .as("score"))
-    topkPerQuery(perDoc, "score", k)
+    TopKPerKey.twoPhase(perDoc, PerQuery, byDesc("score"), k)
       .select(col("query_id"), col("doc_id"), col("n_hit_terms"), col("score"),
         col("rank"))
       .orderBy(col("query_id"), col("rank"))
@@ -295,7 +279,7 @@ object Retrieval {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
         .as("pscore"))
-    val thetaRows = topkPerQuery(partial, "pscore", k)
+    val thetaRows = TopKPerKey.twoPhase(partial, PerQuery, byDesc("pscore"), k)
       .filter(col("rank") === k)
       .select(col("query_id"), col("pscore").as("theta"))
     val theta = qt.select(col("query_id")).distinct()
@@ -335,7 +319,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_hit_terms"),
         aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
           .as("score"))
-    val result = topkPerQuery(perDoc, "score", k)
+    val result = TopKPerKey.twoPhase(perDoc, PerQuery, byDesc("score"), k)
       .select(col("query_id"), col("doc_id"), col("n_hit_terms"), col("score"),
         col("rank"))
       .orderBy(col("query_id"), col("rank"))
@@ -485,7 +469,7 @@ object Retrieval {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
         .as("score"))
-    topkPerQuery(perDoc, "score", poolK)
+    TopKPerKey.twoPhase(perDoc, PerQuery, byDesc("score"), poolK)
       .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
   }
 
@@ -495,17 +479,9 @@ object Retrieval {
     */
   private def semRanked(s: SparkSession, dir: String, numQueries: Int,
       poolK: Int): DataFrame = {
-    val c = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normD(col("embedding")).as("nrm"))
-    val q = c.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        (Similarity.dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm")))
-          .as("cosine"))
-    topkPerQuery(scored, "cosine", poolK)
+    val scored = Similarity.exactScored(Similarity.corpus(s, dir), numQueries)
+      .withColumnRenamed("vec_id", "doc_id")
+    TopKPerKey.twoPhase(scored, PerQuery, byDesc("cosine"), poolK)
       .select(col("query_id"), col("doc_id"), col("rank").as("sem_rank"))
   }
 
@@ -526,7 +502,7 @@ object Retrieval {
       .select(col("query_id"), col("doc_id"), col("lex_rank"), col("sem_rank"),
         (coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(60) + col("sem_rank")), lit(0.0))).as("rrf_score"))
-    topkPerQuery(fused, "rrf_score", k)
+    TopKPerKey.twoPhase(fused, PerQuery, byDesc("rrf_score"), k)
       .select(col("query_id"), col("doc_id"), col("lex_rank"), col("sem_rank"),
         col("rrf_score"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
@@ -588,17 +564,9 @@ object Retrieval {
 
   private def mmrRerankPlan(s: SparkSession, dir: String, numQueries: Int,
       poolN: Int, k: Int): DataFrame = {
-    val c = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normD(col("embedding")).as("nrm"))
-    val q = c.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        col("nrm").as("qn"))
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("doc_id"),
-        (Similarity.dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm")))
-          .as("cosine"))
-    val pool = topkPerQuery(scored, "cosine", poolN)
+    val c = Similarity.corpus(s, dir)
+    val scored = Similarity.exactScored(c, numQueries).withColumnRenamed("vec_id", "doc_id")
+    val pool = TopKPerKey.twoPhase(scored, PerQuery, byDesc("cosine"), poolN)
       .select(col("query_id"), col("doc_id"), col("cosine").as("rel"))
     // r19 optimization round: the greedy selection runs on the DRIVER
     // over the collected pool. The pool is PARAMETER-bounded —
@@ -825,7 +793,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_hit_terms"),
         aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
           .as("score"))
-    topkPerQuery(perDoc, "score", k)
+    TopKPerKey.twoPhase(perDoc, PerQuery, byDesc("score"), k)
       .select(col("query_id"), col("doc_id"), col("n_hit_terms"), col("score"),
         col("rank"))
       .orderBy(col("query_id"), col("rank"))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
+import graft.functions.LongVec
+import graft.plans.TopKPerKey
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -34,11 +36,7 @@ import graft.engine.Pin.PinOps
 object Similarity {
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    // documents and embeddings are bytes-small single-row-group files
-    // whose consumers amplify CPU (token/gram explodes, d^2 products) —
-    // split to >= cores; identity at production scale (Tables.split)
-    if (n == "documents" || n == "embeddings") Tables.split(s, dir, n)
-    else Tables(s, dir, n)
+    Tables.splitCorpus(s, dir, n)
 
   /** Left-fold double dot product of two float-array columns — the exact
     * shape the DuckDB oracle mirrors (`list_reduce(list_transform(...))`)
@@ -63,10 +61,29 @@ object Similarity {
   /** Euclidean norm of a float-array column (left-fold sum of squares). */
   def normD(a: Column): Column = sqrt(dotD(a, a))
 
+  /** Cosine of the query vector `qv` (norm `qn`) against the corpus
+    * vector `v` (norm `nrm`) — the one scoring expression of every exact
+    * and candidate-rescoring path; the norms are precomputed per row.
+    */
+  private[ext] def cosine(v: Column = col("embedding")): Column =
+    dotD(col("qv"), v) / (col("qn") * col("nrm"))
+
+  /** The total order of every cosine ranking: score desc, then vec_id. */
+  private val ByCosine = Seq(col("cosine").desc, col("vec_id"))
+
+  private val PerQuery = Seq(col("query_id"))
+
+  /** The query vectors (vec_id < numQueries) of a [[corpus]] frame, named
+    * for the broadcast side of a scoring join.
+    */
+  private def queryVecs(c: DataFrame, numQueries: Int): DataFrame =
+    c.filter(col("vec_id") < numQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qn"))
+
   /** embeddings with the precomputed norm (norms are reused per row in
     * every cosine the row participates in).
     */
-  private def corpus(s: SparkSession, dir: String): DataFrame =
+  private[ext] def corpus(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), normD(col("embedding")).as("nrm"))
 
@@ -87,15 +104,17 @@ object Similarity {
       cosineTopkPlan(s, dir, numQueries, k).pinned)
 
   private def cosineTopkPlan(s: SparkSession, dir: String,
-      numQueries: Int, k: Int): DataFrame = {
-    val c = corpus(s, dir)
-    val q = c.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val scored = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        (dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cosine"))
-    topkPerQuery(scored, k)
-  }
+      numQueries: Int, k: Int): DataFrame =
+    TopKPerKey.twoPhase(exactScored(corpus(s, dir), numQueries), PerQuery, ByCosine, k)
+      .orderBy(col("query_id"), col("rank"))
+
+  /** (query_id, vec_id, cosine) for every query vector (vec_id <
+    * numQueries) of a [[corpus]] frame against every other vector: the
+    * queries are broadcast, the corpus never shuffles to score.
+    */
+  private[ext] def exactScored(c: DataFrame, numQueries: Int): DataFrame =
+    c.join(broadcast(queryVecs(c, numQueries)), col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), cosine().as("cosine"))
 
   /** Matryoshka-style truncated retrieval: coarse top-`coarseK` ranking
     * on the first `dims` dimensions (a 4x-cheaper dot product — with
@@ -125,32 +144,25 @@ object Similarity {
       .orderBy(col("coarse_cosine").desc, col("vec_id"))
     val rer = coarse.withColumn("crank", row_number().over(wc))
       .filter(col("crank") <= coarseK)
-      .select(col("query_id"), col("vec_id"),
-        (dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cosine"))
-    val wg = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
+      .select(col("query_id"), col("vec_id"), cosine().as("cosine"))
+    val wg = Window.partitionBy(col("query_id")).orderBy(ByCosine: _*)
     rer.withColumn("rank", row_number().over(wg))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id"), col("cosine"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Two-phase per-query top-k on a (query_id, vec_id, cosine) frame:
-    * partition-local prune to k, then the global rank over the survivors.
+  /** Exact-cosine top-k of candidate (query_id, vec_id) pairs — the
+    * shared tail of the LSH and IVF paths: candidates join the corpus,
+    * the query vectors ride a broadcast, and only candidates are scored.
     */
-  private def topkPerQuery(scored: DataFrame, k: Int): DataFrame = {
-    val local = Window.partitionBy(col("query_id"), col("part"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored
-      .withColumn("part", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
+  private def candidateTopk(c: DataFrame, candIds: DataFrame,
+      numQueries: Int, k: Int): DataFrame = {
+    val scored = candIds
+      .join(c, "vec_id")
+      .join(broadcast(queryVecs(c, numQueries)), "query_id")
+      .select(col("query_id"), col("vec_id"), cosine().as("cosine"))
+    TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k).orderBy(col("query_id"), col("rank"))
   }
 
   /** Deterministic Gaussian hyperplanes as a (tbl)(bit)(pos) tensor —
@@ -198,14 +210,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .dropDuplicates("query_id", "vec_id")
-    val q = c.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val scored = candIds
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        (dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cosine"))
-    topkPerQuery(scored, k)
+    candidateTopk(c, candIds, numQueries, k)
   }
 
   /** Session-catalog name for the persisted ANN index — every
@@ -240,26 +245,22 @@ object Similarity {
     * LSH geometry — `tb` values and the probe pruning are unchanged, so
     * the index CONTENT and every query answer are identical; the count
     * rides the table name, so differently-sized corpora never collide).
+    * The formula is not a setting: the round-20 A/B against the old fixed
+    * 256 (BASELINE.md, "Round-20 adjudication") found it faster on both
+    * medians, so it was kept and the override seam removed.
     */
   private val annBucketCache = SessionMemo[String, Integer]("Similarity.annBucket")
 
   private def annStorageBuckets(s: SparkSession, dir: String): Int =
     annBucketCache(s, dir) {
-      // adjudication seam (r20): force a fixed count to A/B the adaptive
-      // formula against the old constant on the same build — layout
-      // only, the index content and every answer are identical
-      sys.env.get("SPARK_GRAFT_ANN_BUCKETS").map(_.trim.toInt).filter(_ > 0)
-        .map(Integer.valueOf)
-        .getOrElse {
-          val n = corpus(s, dir).count()
-          // floor 96: a probe batch carries at most numQueries·numTables
-          // (= 90 at the defaults) distinct bucket keys, so any count above
-          // that keeps the scan's bucket pruning STRICT (SelectedBucketsCount
-          // < total — the SimilaritySpec property); the ~64-vectors-per-
-          // bucket term grows the count with the corpus so tasks stay
-          // meaningful, and the cap bounds scheduling at 10^8+ vectors.
-          Integer.valueOf(math.max(96L, math.min(4096L, n / 64L)).toInt)
-        }
+      val n = corpus(s, dir).count()
+      // floor 96: a probe batch carries at most numQueries·numTables
+      // (= 90 at the defaults) distinct bucket keys, so any count above
+      // that keeps the scan's bucket pruning STRICT (SelectedBucketsCount
+      // < total — the SimilaritySpec property); the ~64-vectors-per-
+      // bucket term grows the count with the corpus so tasks stay
+      // meaningful, and the cap bounds scheduling at 10^8+ vectors.
+      Integer.valueOf(math.max(96L, math.min(4096L, n / 64L)).toInt)
     }.intValue()
 
   def buildAnnIndex(s: SparkSession, dir: String,
@@ -325,9 +326,8 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .dropDuplicates("query_id", "vec_id")
       .join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        (dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cosine"))
-    topkPerQuery(scored, k)
+      .select(col("query_id"), col("vec_id"), cosine().as("cosine"))
+    TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k).orderBy(col("query_id"), col("rank"))
   }
 
   /** The driver-gated form of an approximate top-k (the q29/q41
@@ -449,17 +449,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         aggregate(zip_with(col("qq"), col("q8"), (x, y) => x * y),
           lit(0L), (acc, v) => acc + v).as("idot"))
-    val local = Window.partitionBy(col("query_id"), col("part"))
-      .orderBy(col("idot").desc, col("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("idot").desc, col("vec_id"))
-    val topk = scored
-      .withColumn("part", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"), col("idot"), col("rank"))
+    val topk = TopKPerKey.twoPhase(scored, PerQuery, Seq(col("idot").desc, col("vec_id")), k)
     val ref = cosineTopk(s, dir, numQueries, k).select(col("query_id"), col("vec_id"))
     val overlap = topk.join(ref, Seq("query_id", "vec_id"), "left_semi")
       .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
@@ -511,25 +501,13 @@ object Similarity {
         aggregate(zip_with(col("qsig"), col("sig"),
             (x, y) => bit_count(x.bitwiseXOR(y)).cast(LongType)),
           lit(0L), (acc, v) => acc + v).as("hamming"))
-    val local = Window.partitionBy(col("query_id"), col("part"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val global = Window.partitionBy(col("query_id"))
-      .orderBy(col("hamming"), col("vec_id"))
-    val pool = ham
-      .withColumn("part", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= poolR)
-      .withColumn("hrank", row_number().over(global))
-      .filter(col("hrank") <= poolR)
+    val pool = TopKPerKey.twoPhase(ham, PerQuery, Seq(col("hamming"), col("vec_id")), poolR,
+        "hrank")
       .select(col("query_id"), col("vec_id"), col("hamming"))
-    val q = c.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qn"))
     val rescored = c.join(broadcast(pool), Seq("vec_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"), col("hamming"),
-        (dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
+      .join(broadcast(queryVecs(c, numQueries)), Seq("query_id"))
+      .select(col("query_id"), col("vec_id"), col("hamming"), cosine().as("cosine"))
+    val w = Window.partitionBy(col("query_id")).orderBy(ByCosine: _*)
     rescored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("hamming"), col("cosine"))
@@ -567,15 +545,7 @@ object Similarity {
       sum(when(col("k_occ") === 0L, 1L).otherwise(0L)).as("n_antihubs"),
       max(col("k_occ")).as("max_k_occ"),
       count(lit(1)).as("n_vectors"))
-    val local = Window.partitionBy(col("part"))
-      .orderBy(col("k_occ").desc, col("vec_id"))
-    val global = Window.orderBy(col("k_occ").desc, col("vec_id"))
-    occFull
-      .withColumn("part", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= topHubs)
-      .withColumn("rank", row_number().over(global))
-      .filter(col("rank") <= topHubs)
+    TopKPerKey.twoPhase(occFull, Nil, Seq(col("k_occ").desc, col("vec_id")), topHubs)
       .crossJoin(broadcast(summary))
       .select(col("rank"), col("vec_id"), col("k_occ"),
         col("n_antihubs"), col("max_k_occ"), col("n_vectors"))
@@ -922,15 +892,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .dropDuplicates("query_id", "vec_id")
-    val c = corpus(s, dir)
-    val q = c.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("nrm").as("qn"))
-    val scored = candIds
-      .join(c, "vec_id")
-      .join(broadcast(q), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        (dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cosine"))
-    topkPerQuery(scored, k)
+    candidateTopk(corpus(s, dir), candIds, numQueries, k)
   }
 
   /** Per-label embedding centroids (the preprocessing step an IVF index
@@ -977,7 +939,7 @@ object Similarity {
       .select(col("label"), (col("vec_id") < col("mid")).as("first_half"),
         posexplode(col("embedding")))
       .select(col("label"), col("first_half"), col("pos"),
-        floor(col("col").cast(DoubleType) * 1048576.0).cast(LongType).as("q"))
+        LongVec.quantize(col("col")).as("q"))
     val sums = dims.groupBy(col("label"), col("pos"))
       .agg(sum(when(col("first_half"), col("q")).otherwise(0L)).cast(LongType).as("sa"),
         sum(when(!col("first_half"), col("q")).otherwise(0L)).cast(LongType).as("sb"))
@@ -1059,7 +1021,7 @@ object Similarity {
     val dims = t(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").cast(LongType).as("d"),
-        floor(col("col").cast(DoubleType) * 1048576.0).cast(LongType).as("q"))
+        LongVec.quantize(col("col")).as("q"))
     val votes = (0 until SrpBits).map(b => sum(col("q") * col(s"s$b")).as(s"v$b"))
     dims.join(broadcast(srpSigns(s)), "d")
       .groupBy(col("vec_id"))
@@ -1285,7 +1247,7 @@ object Similarity {
     val dims = emb
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").cast(LongType).as("d"),
-        floor(col("col").cast(DoubleType) * 1048576.0).cast(LongType).as("q"))
+        LongVec.quantize(col("col")).as("q"))
     dims.join(broadcast(srpWideSigns(s, sketchBits)), "d")
       .groupBy(col("vec_id"), col("b"))
       .agg(sum(col("q") * col("sgn")).as("v"))
@@ -1788,17 +1750,8 @@ object Similarity {
         col("embedding").as("qv"), col("nrm").as("qn"))
     val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("query_label"), col("vec_id"), col("label"),
-        (dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cosine"))
-    val local = Window.partitionBy(col("query_id"), col("part"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored
-      .withColumn("part", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosine().as("cosine"))
+    TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k)
   }
 
   def knnLabelEval(s: SparkSession, dir: String,
@@ -1881,20 +1834,8 @@ object Similarity {
         normD(col("embedding")).as("nrm"))
     val scored = e.join(broadcast(q), col("label") =!= col("query_label"))
       .select(col("query_id"), col("query_label"), col("vec_id"),
-        col("label").as("neg_label"),
-        (dotD(col("qv"), col("embedding")) / (col("qn") * col("nrm"))).as("cosine"))
-    val local = Window.partitionBy(col("query_id"), col("part"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    scored
-      .withColumn("part", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("query_label"), col("vec_id"),
-        col("neg_label"), col("cosine"), col("rank"))
+        col("label").as("neg_label"), cosine().as("cosine"))
+    TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1949,18 +1890,8 @@ object Similarity {
         .select(col("vec_id").as("query_id"), col("emb").as("qv"),
           col("nrm").as("qn"))
       val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          (dotD(col("qv"), col("emb")) / (col("qn") * col("nrm"))).as("cosine"))
-      val local = Window.partitionBy(col("query_id"), col("part"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val topd = scored
-        .withColumn("part", spark_partition_id())
-        .withColumn("lrn", row_number().over(local))
-        .filter(col("lrn") <= k)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+        .select(col("query_id"), col("vec_id"), cosine(col("emb")).as("cosine"))
+      val topd = TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k)
         .select(col("query_id"), col("vec_id"))
       val hits = topd.join(full, Seq("query_id", "vec_id"), "left_semi")
       full.agg(count(lit(1)).cast(LongType).as("n_exact"))
@@ -1990,7 +1921,7 @@ object Similarity {
     val dims = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), posexplode(col("embedding")))
       .select(col("vec_id"), col("label"), col("pos"),
-        floor(col("col").cast(DoubleType) * 1048576.0).cast(LongType).as("q"))
+        LongVec.quantize(col("col")).as("q"))
     val sums = dims.groupBy(col("label"), col("pos"))
       .agg(sum(col("q")).cast(LongType).as("sl"))
     val geo = dims.join(broadcast(sums), Seq("label", "pos"))
@@ -2051,7 +1982,7 @@ object Similarity {
     val g = t(s, dir, "embeddings")
       .select(posexplode(col("embedding")).as(Seq("pos", "v")))
       .select((col("pos") + lit(1)).as("dim"),
-        floor(col("v").cast(DoubleType) * lit(1048576.0)).as("q"))
+        LongVec.quantize(col("v")).as("q"))
       .groupBy(col("dim"))
       .agg(count(lit(1)).as("n"),
         sum(col("q")).as("sq"), sum(col("q") * col("q")).as("sq2"),
@@ -2059,11 +1990,11 @@ object Similarity {
     val n = col("n").cast(DoubleType)
     val sq = col("sq").cast(DoubleType)
     g.select(col("dim"), col("n"),
-        (sq / n / lit(1048576.0)).as("mean"),
-        (sqrt((col("sq2").cast(DoubleType) - sq * sq / n) / n) / lit(1048576.0))
+        (sq / n / LongVec.Scale).as("mean"),
+        (sqrt((col("sq2").cast(DoubleType) - sq * sq / n) / n) / LongVec.Scale)
           .as("std"),
-        (col("minq").cast(DoubleType) / lit(1048576.0)).as("min_v"),
-        (col("maxq").cast(DoubleType) / lit(1048576.0)).as("max_v"))
+        (col("minq").cast(DoubleType) / LongVec.Scale).as("min_v"),
+        (col("maxq").cast(DoubleType) / LongVec.Scale).as("max_v"))
       .orderBy(col("dim"))
   }
 
@@ -2082,13 +2013,12 @@ object Similarity {
     val dims = t(s, dir, "embeddings")
       .select(posexplode(col("embedding")).as(Seq("pos", "v")))
       .select((col("pos") + lit(1)).as("dim"),
-        floor(col("v").cast(DoubleType) * lit(1048576.0)).as("q"))
+        LongVec.quantize(col("v")).as("q"))
     val perDim = dims.groupBy(col("dim"))
       .agg(count(lit(1)).as("n"), sum(col("q")).as("sq"),
         sum(col("q") * col("q")).as("sq2"))
     val d = t(s, dir, "embeddings")
-      .select(transform(col("embedding"),
-        v => floor(v.cast(DoubleType) * lit(1048576.0))).as("qa"))
+      .select(transform(col("embedding"), LongVec.quantize(_)).as("qa"))
       .select(size(col("qa")).as("w"),
         posexplode(flatten(transform(col("qa"),
           x => transform(col("qa"), y => x * y)))).as(Seq("idx", "qq")))
@@ -2162,8 +2092,7 @@ object Similarity {
       iters: Int): (Array[Double], Double, Long) =
     pcCache(s, (dir, iters)) {
       val cells = t(s, dir, "embeddings")
-        .select(transform(col("embedding"),
-          v => floor(v.cast(DoubleType) * lit(1048576.0))).as("qa"))
+        .select(transform(col("embedding"), LongVec.quantize(_)).as("qa"))
         .select(size(col("qa")).as("w"),
           posexplode(flatten(transform(col("qa"),
             x => transform(col("qa"), y => x * y)))).as(Seq("idx", "qq")))
@@ -2220,7 +2149,7 @@ object Similarity {
     t(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "e")))
       .select(col("vec_id"), col("dim").cast(LongType).as("dim"),
-        floor(col("e").cast(DoubleType) * lit(1048576.0)).as("q"))
+        LongVec.quantize(col("e")).as("q"))
       .join(broadcast(loadings), Seq("dim"))
       .select(col("vec_id"), col("dim"),
         (col("q").cast(DoubleType) * col("x")).as("p"))
@@ -2228,7 +2157,7 @@ object Similarity {
       .agg((aggregate(
         transform(array_sort(collect_list(struct(col("dim"), col("p")))),
           e => e.getField("p")),
-        lit(0.0), (a, b) => a + b) / lit(1048576.0)).as("proj"))
+        lit(0.0), (a, b) => a + b) / LongVec.Scale).as("proj"))
       .select(col("vec_id"), col("proj"),
         lit(lambda / 1099511627776.0).as("lambda_grid"),
         lit(varExplained).as("var_explained"))
@@ -2246,7 +2175,7 @@ object Similarity {
     def gridSums(df: DataFrame, out: String) = df
       .select(col("label"), posexplode(col("embedding")))
       .select(col("label"), col("pos"),
-        floor(col("col").cast(DoubleType) * 1048576.0).cast(LongType).as("q"))
+        LongVec.quantize(col("col")).as("q"))
       .groupBy(col("label"), col("pos")).agg(sum(col("q")).cast(LongType).as(out))
     val geo = gridSums(batch, "sb")
       .join(gridSums(t(s, dir, "embeddings"), "sr"), Seq("label", "pos"))
@@ -2321,7 +2250,7 @@ object Similarity {
     val dims = t(s, dir, "embeddings")
       .select(col("vec_id"), posexplode(col("embedding")))
       .select(col("vec_id"), col("pos").cast(LongType).as("d"),
-        floor(col("col").cast(DoubleType) * 1048576.0).cast(LongType).as("q"))
+        LongVec.quantize(col("col")).as("q"))
     val maxW = widths.max
     val proj = dims.join(broadcast(srpSigns(s)), "d")
       .groupBy(col("vec_id"))

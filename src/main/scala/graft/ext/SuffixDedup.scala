@@ -122,21 +122,6 @@ object SuffixDedup {
   /** Per-(session, dataset) final suffix ranks — shared by x161/x162/x163. */
   private val rankCache = SessionMemo[String, DataFrame]("SuffixDedup.rank")
 
-  /** Opt-in build profiling (-Dgraft.sa.profile): per-phase wall times
-    * to stdout, used to produce the BASELINE.md scaling table. Zero
-    * cost when unset.
-    */
-  private def saTimed[T](phase: => String)(body: => T): T =
-    if (!sys.props.contains("graft.sa.profile")) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      val t1 = System.nanoTime()
-      println(f"[sa-profile] $phase%-18s ${(t1 - t0) / 1e9}%8.2f s" +
-        f"  [abs ${t0 / 1e9}%.2f -> ${t1 / 1e9}%.2f]")
-      r
-    }
-
   /** Prefix-doubling suffix ranking over the whole corpus: one row per
     * token position, `rank` ordered by suffix content — suffixes with
     * IDENTICAL full content (cross-document exact dups) share a rank
@@ -150,6 +135,9 @@ object SuffixDedup {
     * fully determined and take doc_id as a final key so cross-doc
     * identical short suffixes order deterministically; longer suffixes
     * sharing a seed gram stay tied for the doubling rounds to refine.
+    * The phases carry no in-code timer: the stdout profiler behind
+    * BASELINE.md's round-13 phase table was removed, because per-phase
+    * times belong to the Spark listener's job record, not to println.
     */
   private[ext] def suffixRanks(s: SparkSession, dir: String): DataFrame =
     rankCache(s, dir) {
@@ -168,14 +156,10 @@ object SuffixDedup {
       // like every other content tie.
       // one tokenize+explode pass, reused by the vocab build, the seed
       // join, and the maxLen bound (was three separate corpus scans)
-      val toks = saTimed("tokenize") {
-        tokenPositions(s, dir).pinned
-      }
-      val vocab = saTimed("vocab-rank") {
-        orderLabel(toks.select(col("tok")).distinct(), Seq(col("tok")))
-          .select(col("tok"), col("rank_new").as("vr"))
-          .pinned
-      }
+      val toks = tokenPositions(s, dir).pinned
+      val vocab = orderLabel(toks.select(col("tok")).distinct(), Seq(col("tok")))
+        .select(col("tok"), col("rank_new").as("vr"))
+        .pinned
       val byDocSeed = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       val seeded = toks.join(vocab, Seq("tok"))
         .select(col("doc_id"), col("pos"), col("vr").as("r1"))
@@ -183,12 +167,10 @@ object SuffixDedup {
           (1 until SeedWidth).map(i =>
             coalesce(lead(col("r1"), i).over(byDocSeed), lit(-1L))
               .as(s"r${i + 1}")): _*)
-      var ranks = saTimed("seed-sort") {
-        orderLabel(seeded, (1 to SeedWidth).map(i => col(s"r$i")))
-          .select(col("doc_id"), col("pos"), col("rank_new").as("rank"),
-            col("grp_n"))
-          .pinned
-      }
+      var ranks = orderLabel(seeded, (1 to SeedWidth).map(i => col(s"r$i")))
+        .select(col("doc_id"), col("pos"), col("rank_new").as("rank"),
+          col("grp_n"))
+        .pinned
       // after the round with shift k, ranks order the first 2k tokens;
       // stop once that covers the longest document OR all ranks are
       // already distinct — real text can disambiguate in
@@ -210,19 +192,17 @@ object SuffixDedup {
         // partitioner's sampling job is the pass that materializes it,
         // and the shuffle then reads stored rows — one execution of the
         // window, not two, and no dedicated materialization pass.
-        saTimed(s"round k=$k") {
-          val paired = ranks
-            .withColumn("rank2",
-              coalesce(lead(col("rank"), k.toInt).over(byDoc), lit(-1L)))
-            .pinnedLazy
-          ranks = orderLabel(paired, Seq(col("rank"), col("rank2")))
-            .select(col("doc_id"), col("pos"), col("rank_new").as("rank"),
-              col("grp_n"))
-            .pinned
-          // the all-distinct test reads the grp_n the labeling window
-          // already computed — a filter on the checkpointed frame
-          distinct = ranks.filter(col("grp_n") > 1L).isEmpty
-        }
+        val paired = ranks
+          .withColumn("rank2",
+            coalesce(lead(col("rank"), k.toInt).over(byDoc), lit(-1L)))
+          .pinnedLazy
+        ranks = orderLabel(paired, Seq(col("rank"), col("rank2")))
+          .select(col("doc_id"), col("pos"), col("rank_new").as("rank"),
+            col("grp_n"))
+          .pinned
+        // the all-distinct test reads the grp_n the labeling window
+        // already computed — a filter on the checkpointed frame
+        distinct = ranks.filter(col("grp_n") > 1L).isEmpty
         k *= 2
       }
       ranks.drop("grp_n")
@@ -294,31 +274,10 @@ object SuffixDedup {
     }
 
   private def buildSuffixArray(s: SparkSession, dir: String): DataFrame = {
-      val ranks = suffixRanks(s, dir)
-      val real = saTimed("densify-sort") {
-        ranks
-          .repartitionByRange(col("rank"), col("doc_id"))
-          .sortWithinPartitions(col("rank"), col("doc_id"))
-          .withColumn("part", spark_partition_id())
-          .pinned
-      }
-      val counts = real.groupBy(col("part")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val pids = counts.keys.toSeq.sorted
-      val offsets = pids.map(p =>
-        p -> pids.filter(_ < p).map(counts).sum).toMap
-      val offCol = offsets.foldLeft(lit(0L)) {
-        case (acc, (p, off)) => when(col("part") === p, lit(off)).otherwise(acc) }
-      val sa = saTimed("densify-label") {
-        real
-          .withColumn("sa",
-            row_number().over(Window.partitionBy(col("part"))
-              .orderBy(col("rank"), col("doc_id")))
-              .cast(LongType) + offCol - 1L)
-          .select(col("doc_id"), col("pos"), col("sa"))
-          .pinned
-      }
-      saTimed("lcp") { withLcp(s, dir, sa) }
+    val (numbered, _) = graft.plans.TopKPerKey.denseNumber(suffixRanks(s, dir),
+      Seq(col("rank"), col("doc_id")), "rn")
+    withLcp(s, dir,
+      numbered.select(col("doc_id"), col("pos"), (col("rn") - 1L).as("sa")).pinned)
   }
 
   /** Augment the dense SA with capped token-LCPs of SA-adjacent suffixes:

@@ -71,9 +71,7 @@ object UnigramLm {
   val Rounds = 3
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    // corpus text splits to >= cores before tokenization (Tables.split
-    // scaladoc); identity at production scale
-    if (n == "documents") Tables.split(s, dir, n) else Tables(s, dir, n)
+    Tables.splitCorpus(s, dir, n)
 
   /** documents → (w, freq) word histogram — the ONE corpus-sized pass.
     * Same token law as the x101 BPE trainer (whitespace split of

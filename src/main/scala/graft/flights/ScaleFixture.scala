@@ -161,13 +161,12 @@ object ScaleFixture {
   }
 }
 
-/** Times the reference pipeline shape at the reference's data scale:
-  * extract+load per staging table (generate -> truncate-load parquet,
-  * the S7 full-load the reference's initial run performs), then each of
-  * the 8 star transforms truncate-loaded — one wall time per "task",
-  * comparable against the reference's Airflow Gantt
-  * (`images/DAGSdiagram.png`, <= ~22 s per task). Prints one line per
-  * stage plus a total. Usage:
+/** Times the reference pipeline at the reference's data scale through
+  * the real code path: one `Pipeline.runFor` (full extract -> CSV edge ->
+  * load of the 8 staging tables, then the 8 star transforms) and one
+  * `Pipeline.transformAtomic` (the atomic star publish), one wall-time
+  * line per call plus their total, comparable against the reference's
+  * Airflow Gantt (`images/DAGSdiagram.png`, <= ~22 s per task). Usage:
   *   sbt "runMain graft.flights.ScaleBench [warehouseDir]"
   */
 object ScaleBench {
@@ -175,37 +174,22 @@ object ScaleBench {
     val wh = if (args.nonEmpty) args(0)
       else java.nio.file.Files.createTempDirectory("graft_scalebench").toString
     val spark = graft.GraftSession.local("scalebench", graft.GraftSession.cpus(32))
-    def timed(name: String)(f: => Long): Double = {
+    def timed(name: String)(f: => Unit): Double = {
       val t0 = System.nanoTime()
-      val n = f
+      f
       val secs = (System.nanoTime() - t0) / 1e9
-      println(f"[scale] $name%-28s $secs%7.2f s  ($n%,d rows)")
+      println(f"[scale] $name%-16s $secs%7.2f s")
       secs
     }
     val src = ScaleFixture.staging(spark)
-    val loadSecs = Pipeline.FkOrder.map { t =>
-      timed(s"extract+load $t") {
-        graft.engine.Sinks.truncateLoad(src(t), s"$wh/stg/$t")
-        spark.read.parquet(s"$wh/stg/$t").count()
-      }
-    }.sum
-    val stg = Pipeline.FkOrder.map(t => t -> spark.read.parquet(s"$wh/stg/$t")).toMap
-    val tfSecs = StarSchema.transforms.map { case (name, fn) =>
-      timed(s"transform $name") {
-        graft.engine.Sinks.truncateLoad(fn(stg), s"$wh/$name")
-        spark.read.parquet(s"$wh/$name").count()
-      }
-    }.sum
-    // the reference's MinIO hop (S3/S5: extract writes CSV, load re-reads
-    // under the declared schema) priced at the largest table
-    val csvSecs = timed("csv edge ticket_flights") {
-      val df = stg("ticket_flights")
-      graft.engine.Sources.writeCsv(df, s"$wh/edge/ticket_flights")
-      graft.engine.Sources.readCsv(spark, df.schema, s"$wh/edge/ticket_flights").count()
+    val total = timed("runFor") {
+      val loaded = Pipeline.runFor(spark, src, wh, "2024-06-10",
+        PipelineConfig(incremental = false, csvEdge = true))
+      require(loaded.size == Pipeline.FkOrder.size, s"not every table loaded: $loaded")
+    } + timed("transformAtomic") {
+      require(Pipeline.transformAtomic(spark, wh).isDefined, "star publish skipped")
     }
-    println(f"[scale] TOTAL load=$loadSecs%.2f s transforms=$tfSecs%.2f s " +
-      f"all=${loadSecs + tfSecs}%.2f s (+ csv edge $csvSecs%.2f s) " +
-      "(reference Gantt: <= ~22 s/task)")
+    println(f"[scale] TOTAL $total%.2f s (reference Gantt: <= ~22 s/task)")
     spark.stop()
   }
 }

@@ -1,12 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.functions.{floor, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Native integer-vector kernels for the grid-quantized clustering lane
   * (the long-array siblings of [[DotD]]): `dot_l` = Σ aᵢ·bᵢ and
@@ -137,6 +138,17 @@ case class NearestCentroidL(first: Expression, second: Expression,
 }
 
 object LongVec {
+
+  /** The 2^-20 grid of every integer-exact vector lane: a coordinate x
+    * becomes the BIGINT floor(x · Scale), so grid sums, dots and squared
+    * distances are exact integers whatever the summation order or engine;
+    * dividing by `Scale` maps a grid quantity back to vector units. The
+    * DuckDB twins spell the same step in their SQL.
+    */
+  val Scale: Double = 1048576.0
+
+  /** `x` (float or double) on the grid, as BIGINT. */
+  def quantize(x: Column): Column = floor(x.cast(DoubleType) * lit(Scale)).cast(LongType)
 
   /** Identity-memoized codebook decode. The codebook reaches the kernel
     * as a constant LITERAL — the very same ArrayData instance on every

@@ -107,7 +107,7 @@ object SrpBandKeys {
     var d = 0
     while (d < Dims) {
       if (a.isNullAt(d)) return null
-      q(d) = math.floor(a.getFloat(d).toDouble * 1048576.0).toLong
+      q(d) = math.floor(a.getFloat(d).toDouble * LongVec.Scale).toLong
       d += 1
     }
     val bits = signs.length

@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * a group to one task before ranking; this Aggregator's partial buffers
   * never exceed k entries, so map-side combine reduces the shuffle to
   * k rows per (group, partition) — the same two-phase idea as
-  * `Similarity.topkPerQuery`, packaged as a reusable typed aggregate.
+  * `graft.plans.TopKPerKey.twoPhase`, packaged as a reusable typed aggregate.
   */
 final case class Scored(score: Double, id: Long)
 

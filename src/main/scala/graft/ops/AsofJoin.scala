@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
 
-/** As-of (backward temporal) join — the operator a tick/trade pipeline
-  * calls `ASOF JOIN`: each left row picks the LATEST right row with
-  * `right.ts <= left.ts` in its key group.
+/** As-of (temporal) join — the operator a tick/trade pipeline calls
+  * `ASOF JOIN`: each left row picks the LATEST right row with
+  * `right.ts <= left.ts` in its key group (backward), or the EARLIEST
+  * with `right.ts >= left.ts` (forward).
   *
   * Spark-first shape: Spark has no native as-of join, and the naive
   * spelling (range join + per-left-row argmax) explodes into an
@@ -22,7 +23,11 @@ import graft.engine.Tables
   */
 object AsofJoin {
 
-  /** Backward as-of join.
+  /** As-of join, backward by default. The forward direction (pandas
+    * merge_asof direction='forward', "what happened next") is the same
+    * union-one-shuffle shape with the window sort REVERSED (ts desc, right
+    * first at equal ts keeps >= inclusive): the running ignore-nulls
+    * `last` then carries the nearest LATER right row onto each left row.
     *
     * @param left      probe side
     * @param right     reference side; must be unique per (by, rightTs) —
@@ -32,13 +37,14 @@ object AsofJoin {
     * @param leftTs    left event-time column
     * @param rightTs   right event-time column
     * @param rightVals right payload columns to carry (renamed as given)
-    * @param tolerance optional maximum lookback `left.ts - right.ts`;
-    *                  matches older than it become NULL
+    * @param tolerance optional maximum distance `|left.ts - right.ts|`;
+    *                  matches farther than it become NULL
+    * @param forward   match the earliest right row at or after left.ts
     */
   def asofJoin(left: DataFrame, right: DataFrame, by: Seq[String],
       leftTs: String, rightTs: String,
       rightVals: Map[String, String],
-      tolerance: Option[Column] = None): DataFrame = {
+      tolerance: Option[Column] = None, forward: Boolean = false): DataFrame = {
     val leftCols = left.columns.toSeq
     val carried = rightVals.values.toSeq
     val l = left
@@ -57,9 +63,9 @@ object AsofJoin {
           lit(null).cast(left.schema(c).dataType).as(c)) ++
         Seq(col(rightTs).as("_rts")) ++
         rightVals.map { case (src, dst) => col(src).as(dst) }.toSeq): _*)
-    // right row sorts before left at the same timestamp -> inclusive <=
+    // right row sorts before left at the same timestamp -> inclusive
     val w = Window.partitionBy(by.map(col): _*)
-      .orderBy(col("_ts"), col("_side"))
+      .orderBy(if (forward) col("_ts").desc else col("_ts"), col("_side"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val matchedTs = last(col("_rts"), ignoreNulls = true).over(w)
     val withMatch = l.unionByName(r)
@@ -67,7 +73,8 @@ object AsofJoin {
       .withColumns(carried.map(c =>
         c -> last(col(c), ignoreNulls = true).over(w)).toMap)
     val inWindow = tolerance match {
-      case Some(tol) => col("_mts").isNotNull && col("_ts") - col("_mts") <= tol
+      case Some(tol) => col("_mts").isNotNull &&
+        (if (forward) col("_mts") - col("_ts") else col("_ts") - col("_mts")) <= tol
       case None => col("_mts").isNotNull
     }
     withMatch
@@ -96,56 +103,6 @@ object AsofJoin {
       .orderBy(col("event_id"))
   }
 
-  /** FORWARD as-of join (pandas merge_asof direction='forward'): each
-    * left row picks the EARLIEST right row with `right.ts >= left.ts` in
-    * its key group — "what happened next". Same union-one-shuffle shape
-    * as the backward join with the window sort REVERSED (ts desc, right
-    * first at equal ts keeps >= inclusive); the running ignore-nulls
-    * `last` then carries the nearest LATER right row backward onto each
-    * left row. One Exchange, no pair blowup — identical scale story.
-    */
-  def asofJoinForward(left: DataFrame, right: DataFrame, by: Seq[String],
-      leftTs: String, rightTs: String,
-      rightVals: Map[String, String],
-      tolerance: Option[Column] = None): DataFrame = {
-    val leftCols = left.columns.toSeq
-    val carried = rightVals.values.toSeq
-    val l = left
-      .withColumn("_ts", col(leftTs))
-      .withColumn("_side", lit(1))
-      .select((by.map(col) ++ Seq(col("_ts"), col("_side")) ++
-        leftCols.filterNot(by.contains).map(col) ++
-        Seq(lit(null).cast(right.schema(rightTs).dataType).as("_rts")) ++
-        carried.map(c => lit(null).cast(right.schema(rightVals.find(_._2 == c).get._1)
-          .dataType).as(c))): _*)
-    val r = right
-      .withColumn("_ts", col(rightTs))
-      .withColumn("_side", lit(0))
-      .select((by.map(col) ++ Seq(col("_ts"), col("_side")) ++
-        leftCols.filterNot(by.contains).map(c =>
-          lit(null).cast(left.schema(c).dataType).as(c)) ++
-        Seq(col(rightTs).as("_rts")) ++
-        rightVals.map { case (src, dst) => col(src).as(dst) }.toSeq): _*)
-    // DESCENDING ts; right row first at the same timestamp -> inclusive >=
-    val w = Window.partitionBy(by.map(col): _*)
-      .orderBy(col("_ts").desc, col("_side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val matchedTs = last(col("_rts"), ignoreNulls = true).over(w)
-    val withMatch = l.unionByName(r)
-      .withColumn("_mts", matchedTs)
-      .withColumns(carried.map(c =>
-        c -> last(col(c), ignoreNulls = true).over(w)).toMap)
-    val inWindow = tolerance match {
-      case Some(tol) => col("_mts").isNotNull && col("_mts") - col("_ts") <= tol
-      case None => col("_mts").isNotNull
-    }
-    withMatch
-      .filter(col("_side") === 1)
-      .select((by.map(col) ++ leftCols.filterNot(by.contains).map(col) ++
-        Seq(when(inWindow, col("_mts")).as("matched_ts")) ++
-        carried.map(c => when(inWindow, col(c)).as(c))): _*)
-  }
-
   /** Graded query: each view's NEXT click by the same user within one
     * hour (forward direction + tolerance — "did the impression convert,
     * and when"). Matches beyond the hour report NULL: the nearest later
@@ -160,9 +117,9 @@ object AsofJoin {
     val clicks = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id"), col("ts"))
       .agg(max(col("value")).as("click_value"))
-    asofJoinForward(views, clicks, Seq("user_id"), "ts", "ts",
+    asofJoin(views, clicks, Seq("user_id"), "ts", "ts",
       Map("click_value" -> "click_value"),
-      tolerance = Some(expr("INTERVAL '1' HOUR")))
+      tolerance = Some(expr("INTERVAL '1' HOUR")), forward = true)
       .select(col("event_id"), col("user_id"), col("ts"), col("value"),
         col("matched_ts"), col("click_value"))
       .orderBy(col("event_id"))

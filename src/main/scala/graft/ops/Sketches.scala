@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
+import graft.plans.TopKPerKey
 
 /** Sketch/approximate aggregates — the cardinality and quantile shapes
   * that replace exact (shuffle-heavy) computation at 100 TB:
@@ -343,25 +344,8 @@ object Sketches {
     import org.apache.spark.sql.expressions.Window
     val a = Tables(s, dir, "orders").select(col("o_custkey").as("k"))
     val b = Tables(s, dir, "customer").select(col("c_custkey").as("k"))
-    // rank distinct keys WITHOUT a global window (the suffixArray
-    // densification discipline): range-partition them, number within
-    // partitions, add per-partition offsets — one <= #partitions
-    // collect of counts, never rows
-    val dparts = a.distinct()
-      .repartitionByRange(col("k"))
-      .sortWithinPartitions(col("k"))
-      .withColumn("part", spark_partition_id())
-      .pinned
-    val counts = dparts.groupBy(col("part")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val ndv = counts.values.sum
-    val pids = counts.keys.toSeq.sorted
-    val offsets = pids.map(p => p -> pids.filter(_ < p).map(counts).sum).toMap
-    val offCol = offsets.foldLeft(lit(0L)) {
-      case (acc, (p, off)) => when(col("part") === p, lit(off)).otherwise(acc) }
-    val dk = dparts.withColumn("rn",
-      row_number().over(Window.partitionBy(col("part")).orderBy(col("k")))
-        .cast("long") + offCol)
+    // rank distinct keys WITHOUT a global window
+    val (dk, ndv) = TopKPerKey.denseNumber(a.distinct(), Seq(col("k")), "rn")
     val bounds = dk
       .withColumn("bucket", floor((col("rn") - 1) * buckets / lit(ndv)))
       .groupBy(col("bucket")).agg(max(col("k")).as("hi"))
@@ -510,11 +494,7 @@ object Sketches {
     */
   def bottomkPairs(el: DataFrame, k: Int, withAnchor: Boolean): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val localW = Window.partitionBy(col("source"), col("part")).orderBy(col("h").asc)
-    val globalW = Window.partitionBy(col("source")).orderBy(col("h").asc)
-    val sk = el.withColumn("part", spark_partition_id())
-      .withColumn("lrank", row_number().over(localW)).filter(col("lrank") <= k)
-      .withColumn("rn", row_number().over(globalW)).filter(col("rn") <= k)
+    val sk = TopKPerKey.twoPhase(el, Seq(col("source")), Seq(col("h").asc), k)
       .select(col("source"), col("h"))
       .pinned // k rows per source: the published sketches
     // one row per source — checkpoint so the twin n_a/n_b joins don't

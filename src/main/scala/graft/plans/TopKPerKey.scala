@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
@@ -9,7 +9,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, count, lit, row_number, spark_partition_id, when}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.graft.PlanBridge
 
 import graft.engine.Tables
@@ -146,6 +148,53 @@ object TopKPerKey {
         else org.apache.spark.sql.catalyst.expressions.Descending)
     }
     PlanBridge.ofRows(spark, TopKPerKeyPlan(keyExprs, sortOrders, k, child))
+  }
+
+  /** Per-key top-k as the two-phase WINDOW spelling: rank within (keys,
+    * input partition) and keep <= k, then rank within keys and keep
+    * <= k. Any row among a key's global k best is among its partition's
+    * k best, so the result equals the single `row_number` window, but
+    * the global window sees at most k·partitions rows per key — never
+    * a whole key group on one reducer. Empty `keys` is a global top-k.
+    * Returns `df`'s columns plus `rankCol` (1-based under `order`, which
+    * should be a total order for a deterministic choice among ties).
+    */
+  def twoPhase(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int,
+      rankCol: String = "rank"): DataFrame = {
+    val local = Window.partitionBy(keys :+ col("_part"): _*).orderBy(order: _*)
+    val global = Window.partitionBy(keys: _*).orderBy(order: _*)
+    df.withColumn("_part", spark_partition_id())
+      .withColumn("_lrank", row_number().over(local))
+      .filter(col("_lrank") <= k)
+      .withColumn(rankCol, row_number().over(global))
+      .filter(col(rankCol) <= k)
+      .drop("_part", "_lrank")
+  }
+
+  /** A 1-based global row number `numCol` under `order` WITHOUT a global
+    * window: range-partition on `order`, number rows within each
+    * partition, and add the partition's offset — the counts of all lower
+    * partitions, from one collect of (partition, count) pairs (one long
+    * per partition, never rows). The range-partitioned frame is pinned so
+    * the count job and the numbering read it once. Returns the numbered
+    * frame (`df`'s columns plus `numCol`) and the total row count.
+    */
+  def denseNumber(df: DataFrame, order: Seq[Column],
+      numCol: String): (DataFrame, Long) = {
+    val parts = df.repartitionByRange(order: _*)
+      .sortWithinPartitions(order: _*)
+      .withColumn("_part", spark_partition_id())
+      .pinned
+    val counts = parts.groupBy(col("_part")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val pids = counts.keys.toSeq.sorted
+    val offCol = pids.foldLeft(lit(0L)) { (acc, p) =>
+      when(col("_part") === p, lit(pids.filter(_ < p).map(counts).sum)).otherwise(acc) }
+    (parts.withColumn(numCol,
+        row_number().over(Window.partitionBy(col("_part")).orderBy(order: _*))
+          .cast(LongType) + offCol)
+      .drop("_part"),
+      counts.values.sum)
   }
 
   /** x178: per-event-type top-5 events by (value desc, event_id) through

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.engine.VersionedTable
-import graft.ext.NnGraph
+import graft.ext.{Clustering, NnGraph}
 
 /** Streaming maintenance of the k-NN graph — the graph-ANN lane's
   * streaming form, mirroring RetrievalIngest: each micro-batch of
@@ -32,7 +32,7 @@ object GraphIngest {
     SnapshotIngest.toVersioned(arrivals, root, checkpoint) { (batch, _) =>
       val s = batch.sparkSession
       NnGraph.insertEdges(
-        NnGraph.quantized(batch), NnGraph.standingQ(s, dir),
+        Clustering.gridVecs(batch), NnGraph.standingQ(s, dir),
         NnGraph.nnEdges(s, dir, k, rounds, buckets, "standing"),
         k, buckets)
     }

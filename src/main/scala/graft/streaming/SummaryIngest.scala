@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.engine.VersionedTable
 import graft.functions.{QDigest, QDigestAgg, QDigestMergeAgg}
+import graft.plans.TopKPerKey
 
 /** Streaming maintenance of the round's two mergeable summaries — the
   * continuous form x175 (q-digest) and x171 (KMV bottom-k) imply:
@@ -34,16 +35,10 @@ object SummaryIngest {
   }
 
   /** Per-source bottom-k partials for one batch of (source, h) rows. */
-  def kmvBatch(batch: DataFrame, k: Int = 128): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val localW = Window.partitionBy(col("source"), col("part")).orderBy(col("h").asc)
-    val globalW = Window.partitionBy(col("source")).orderBy(col("h").asc)
-    batch.select(col("source"), col("h")).distinct()
-      .withColumn("part", spark_partition_id())
-      .withColumn("lrank", row_number().over(localW)).filter(col("lrank") <= k)
-      .withColumn("rn", row_number().over(globalW)).filter(col("rn") <= k)
+  def kmvBatch(batch: DataFrame, k: Int = 128): DataFrame =
+    TopKPerKey.twoPhase(batch.select(col("source"), col("h")).distinct(),
+      Seq(col("source")), Seq(col("h").asc), k)
       .select(col("source"), col("h"))
-  }
 
   /** The served digest: union-merge every committed partial. */
   def servedDigest(s: SparkSession, root: String): QDigest = {

@@ -1,12 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.engine.{Tables, VersionedTable}
 import graft.ext.TextAnalysis
+import graft.plans.TopKPerKey
 
 /** Continuously-maintained token frequencies — the streaming form of the
   * q41/x06 vocabulary lanes: each arriving micro-batch of documents is
@@ -39,23 +39,13 @@ object TrendingTokens {
     a.unionByName(b).groupBy(col("token")).agg(sum(col("n")).as("n"))
 
   /** Deterministic top-k of a counts frame: (n desc, token). Two-phase
-    * (the pqErrorOutliers discipline): each partition prunes to its own
-    * best k before the single-partition rank window sees anything, so
-    * the global window ranks at most k·partitions rows — never the
-    * whole vocabulary.
+    * ([[TopKPerKey.twoPhase]]): the global window ranks at most
+    * k·partitions rows — never the whole vocabulary.
     */
-  def topK(counts: DataFrame, k: Int): DataFrame = {
-    val local = Window.partitionBy(col("part"))
-      .orderBy(col("n").desc, col("token"))
-    val w = Window.orderBy(col("n").desc, col("token"))
-    counts.withColumn("part", spark_partition_id())
-      .withColumn("lrn", row_number().over(local))
-      .filter(col("lrn") <= k)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+  def topK(counts: DataFrame, k: Int): DataFrame =
+    TopKPerKey.twoPhase(counts, Nil, Seq(col("n").desc, col("token")), k)
       .select(col("token"), col("n"), col("rank"))
       .orderBy(col("rank"))
-  }
 
   /** x152: the maintained-counts core as a graded batch twin — docs
     * with doc_id >= `splitAt` play one arriving micro-batch, the rest

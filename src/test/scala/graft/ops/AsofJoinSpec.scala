@@ -67,8 +67,8 @@ class AsofJoinSpec extends SparkSpec {
 
   test("forward as-of matches earliest right at or after left; one Exchange; tolerance") {
     def runFwd(tol: Option[org.apache.spark.sql.Column]) =
-      AsofJoin.asofJoinForward(leftDf, rightDf, Seq("k"), "ts", "rts",
-        Map("price" -> "price"), tol)
+      AsofJoin.asofJoin(leftDf, rightDf, Seq("k"), "ts", "rts",
+        Map("price" -> "price"), tol, forward = true)
         .collect().map(r => r.getLong(1) ->
           (Option(r.getTimestamp(3)).map(_.toString),
             if (r.isNullAt(4)) None else Some(r.getDouble(4))))
@@ -86,8 +86,8 @@ class AsofJoinSpec extends SparkSpec {
     val tight = runFwd(Some(expr("INTERVAL 10 MINUTES")))
     assert(tight(3L) == (None, None))
     assert(tight(1L) == (Some("2024-01-01 10:00:00.0"), Some(100.0)))
-    val plan = AsofJoin.asofJoinForward(leftDf, rightDf, Seq("k"), "ts", "rts",
-      Map("price" -> "price")).queryExecution.executedPlan.toString
+    val plan = AsofJoin.asofJoin(leftDf, rightDf, Seq("k"), "ts", "rts",
+      Map("price" -> "price"), forward = true).queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(exchanges == 1, s"forward variant keeps the single key shuffle:\n$plan")
   }
