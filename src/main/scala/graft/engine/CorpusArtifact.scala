@@ -36,16 +36,30 @@ object CorpusArtifact {
     * spuriously, which is the safe direction.
     */
   def fingerprint(s: SparkSession, dir: String,
-      table: String = "documents"): String = {
-    val p = new org.apache.hadoop.fs.Path(Tables.path(dir, table))
+      table: String = "documents"): String =
+    pathFingerprint(s, Tables.path(dir, table))
+
+  /** [[fingerprint]] of the file or directory tree at `path`. Files in
+    * subdirectories (the `p_date=` partitions of a staging root) are
+    * named by their path below `path`, so a flat table's fingerprint is
+    * its per-file names as they always were. Throws
+    * `FileNotFoundException` when `path` does not exist.
+    */
+  def pathFingerprint(s: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(p)
     val st = fs.getFileStatus(p)
     val parts =
-      if (st.isDirectory)
-        fs.listStatus(p).toSeq.filter(_.isFile).sortBy(_.getPath.getName)
-      else Seq(st)
-    val sig = (fs.makeQualified(p).toString +:
-      parts.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"))
+      if (st.isDirectory) {
+        val prefix = root.toUri.getPath.stripSuffix("/") + "/"
+        val files = fs.listFiles(p, true)
+        Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+          .map(f => f.getPath.toUri.getPath.stripPrefix(prefix) -> f).toSeq
+          .sortBy(_._1)
+      } else Seq(st.getPath.getName -> st)
+    val sig = (root.toString +:
+      parts.map { case (n, f) => s"$n:${f.getLen}:${f.getModificationTime}" })
       .mkString("|")
     java.security.MessageDigest.getInstance("MD5")
       .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.expr
 
 /** Table registry: name -> parquet path under a scale-factor directory.
@@ -21,15 +22,37 @@ object Tables {
   /** Scan a registered table. Schema comes from the parquet footer —
     * deterministic (driver-written), so no inference ambiguity to pin.
     *
+    * Memoized per (session, table path, [[CorpusArtifact.pathFingerprint]]):
+    * opening a parquet table runs a one-task schema-inference job, which
+    * a warm lane call would otherwise pay on every open. A rewritten table
+    * has a new fingerprint and so opens afresh, with no
+    * [[SessionMemo.reset]]. A missing table is not memoized: the read
+    * raises Spark's own path-not-found error.
+    *
     * `events.ts` is written as parquet TIMESTAMP(NANOS), which Spark's
     * vectorized reader rejects (`PARQUET_TYPE_ILLEGAL`). We read it as a
     * raw long (`nanosAsLong`) and convert to micro-precision
     * TimestampType with integer `DIV` (a double division would lose
     * precision: epoch-nanos ~1.7e18 exceeds 2^53). DuckDB applies the
     * same nanos->micros truncation when it reads the file, so oracle
-    * comparisons stay exact.
+    * comparisons stay exact. The conf fallback and the footer check run
+    * inside the memoized open, so once per table state.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
+    memoized(spark, dir, name, split = false)(open(spark, path(dir, name), name))
+
+  private val scans = SessionMemo[(String, String, Boolean), DataFrame]("Tables.scan")
+
+  /** `build` memoized per (session, table path, fingerprint, split). */
+  private def memoized(spark: SparkSession, dir: String, name: String,
+      split: Boolean)(build: => DataFrame): DataFrame = {
+    val p = path(dir, name)
+    val fp = try Some(CorpusArtifact.pathFingerprint(spark, p))
+      catch { case _: java.io.FileNotFoundException => None }
+    fp.fold(build)(f => scans(spark, (p, f, split))(build))
+  }
+
+  private def open(spark: SparkSession, p: String, name: String): DataFrame =
     if (name == "events") {
       // Sessions should set this at construction (Verify/Bench/SparkSpec
       // builders do); this is a fallback for ad-hoc sessions. It is
@@ -37,7 +60,7 @@ object Tables {
       // mid-flight (the set is visible session-wide, not per-read).
       if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(path(dir, name))
+      val raw = spark.read.parquet(p)
       // TIMESTAMP(NANOS) arrives as a long under nanosAsLong and needs
       // the DIV-1000 truncation; a rewritten corpus (e.g. the 10x
       // scaling clone, written by DuckDB as micros) arrives as a native
@@ -48,7 +71,7 @@ object Tables {
       // type annotation must actually say TIMESTAMP(NANOS).
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>
-          assertTsIsNanos(spark, path(dir, name))
+          assertTsIsNanos(spark, p)
           raw.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
         case org.apache.spark.sql.types.TimestampNTZType =>
           // An arrow-written corpus (isAdjustedToUTC=false micros) arrives
@@ -65,7 +88,7 @@ object Tables {
             raw.col("ts").cast(org.apache.spark.sql.types.TimestampType))
         case _ => raw
       }
-    } else spark.read.parquet(path(dir, name))
+    } else spark.read.parquet(p)
 
   /** The table scan split to at least the session's parallelism — for
     * CPU-AMPLIFYING consumers (token/gram explodes over `documents`
@@ -75,13 +98,19 @@ object Tables {
     * one core (measured 10x: 30+ s single-threaded gram passes).
     * CONDITIONAL on purpose: a production corpus scan already has
     * >= cores partitions and must NOT pay a full-text shuffle — this
-    * is then the identity.
+    * is then the identity. Memoized like [[apply]]; the partition count
+    * comes from the scan's own physical plan, so deciding plans no
+    * second query.
     */
-  def split(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = apply(spark, dir, name)
-    val p = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
-  }
+  def split(spark: SparkSession, dir: String, name: String): DataFrame =
+    memoized(spark, dir, name, split = true) {
+      val df = apply(spark, dir, name)
+      val p = spark.sparkContext.defaultParallelism
+      val parts = df.queryExecution.sparkPlan.collectFirst {
+        case scan: FileSourceScanExec => scan.inputRDD.getNumPartitions
+      }.get
+      if (parts >= p) df else df.repartition(p)
+    }
 
   /** The scan rule of the corpus lanes: `documents` and `embeddings` are
     * bytes-small single-row-group files whose consumers amplify CPU
@@ -92,41 +121,36 @@ object Tables {
     if (name == "documents" || name == "embeddings") split(spark, dir, name)
     else apply(spark, dir, name)
 
-  /** Paths whose INT64 `ts` has been footer-verified as
-    * TIMESTAMP(NANOS) — one footer read per path per JVM.
+  /** Fail unless the INT64 `ts` of the table at `p` is annotated
+    * TIMESTAMP(NANOS) in its parquet footer.
     */
-  private val nanosVerified =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def assertTsIsNanos(spark: SparkSession, p: String): Unit =
-    if (!nanosVerified.contains(p)) {
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val conf = spark.sessionState.newHadoopConf()
-      val fsPath = new org.apache.hadoop.fs.Path(p)
-      val fs = fsPath.getFileSystem(conf)
-      val file =
-        if (fs.getFileStatus(fsPath).isDirectory)
-          fs.listStatus(fsPath).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).head
-        else fsPath
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-      val ann =
-        try {
-          val schema = reader.getFooter.getFileMetaData.getSchema
-          schema.getType(schema.getFieldIndex("ts"))
-            .asPrimitiveType().getLogicalTypeAnnotation
-        }
-        finally reader.close()
-      ann match {
-        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-            if t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS =>
-          nanosVerified.add(p): Unit
-        case other => throw new IllegalStateException(
-          s"$p: ts is INT64 but its parquet logical type is " +
-            s"${Option(other).getOrElse("<none>")}, not TIMESTAMP(NANOS) — " +
-            "refusing the nanos->micros DIV 1000 (a micros-as-INT64 " +
-            "column would be silently mis-scaled 1000x)")
+  private def assertTsIsNanos(spark: SparkSession, p: String): Unit = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    val conf = spark.sessionState.newHadoopConf()
+    val fsPath = new org.apache.hadoop.fs.Path(p)
+    val fs = fsPath.getFileSystem(conf)
+    val file =
+      if (fs.getFileStatus(fsPath).isDirectory)
+        fs.listStatus(fsPath).map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")).head
+      else fsPath
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val ann =
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        schema.getType(schema.getFieldIndex("ts"))
+          .asPrimitiveType().getLogicalTypeAnnotation
       }
+      finally reader.close()
+    ann match {
+      case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+          if t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS => ()
+      case other => throw new IllegalStateException(
+        s"$p: ts is INT64 but its parquet logical type is " +
+          s"${Option(other).getOrElse("<none>")}, not TIMESTAMP(NANOS) — " +
+          "refusing the nanos->micros DIV 1000 (a micros-as-INT64 " +
+          "column would be silently mis-scaled 1000x)")
     }
+  }
 }

@@ -169,6 +169,9 @@ object Linkage {
     */
   private val repPairCache = SessionMemo[(String, Int, Int), DataFrame]("Linkage.repPair")
 
+  /** x217's CC labels over [[repPairCache]]'s pairs, same key. */
+  private val edLabelCache = SessionMemo[(String, Int, Int), DataFrame]("Linkage.edLabels")
+
   private def edRepPairs(s: SparkSession, dir: String, tau: Int,
       cap: Int): (DataFrame, DataFrame) = {
     val nm0 = t(s, dir, "customer")
@@ -308,15 +311,17 @@ object Linkage {
     * members inherit their component through the name -> rep mapping,
     * and an identical-name group is itself a cluster (its members are
     * pairwise distance 0). The component label (min rep) IS the min
-    * member custkey, because every rep is its group's minimum.
+    * member custkey, because every rep is its group's minimum. The CC
+    * labels are eager, so they are built once per (session, dataset,
+    * tau, cap).
     */
   def edClusters(s: SparkSession, dir: String, tau: Int = 1,
       cap: Int = 256): DataFrame = {
     val (nm0, repPairs) = edRepPairs(s, dir, tau, cap)
     val reps = nm0.groupBy(col("nm")).agg(min(col("key")).as("rep"))
     val m2r = nm0.join(reps, Seq("nm")).select(col("key"), col("rep"))
-    val lbl = Dedup.connectedComponents(
-      repPairs.select(col("a_custkey").as("doc_a"), col("b_custkey").as("doc_b")))
+    val lbl = edLabelCache(s, (dir, tau, cap))(Dedup.connectedComponents(
+      repPairs.select(col("a_custkey").as("doc_a"), col("b_custkey").as("doc_b"))))
     val assigned = m2r
       .join(lbl.select(col("id").as("rep"), col("lbl")), Seq("rep"), "left")
       .select(col("key").as("c_custkey"),

@@ -1373,26 +1373,31 @@ object Similarity {
     * embedding side): a group's rep is its MINIMUM id, so the
     * component-min label at rep grain IS the component-min over all
     * members; multi-member groups whose self-cosine passes but whose
-    * rep pairs with nothing become their own cliques.
+    * rep pairs with nothing become their own cliques. Built and pinned
+    * once per (session, dataset), like `Dedup.clusterLabels`: the CC
+    * rounds are eager, and x57 and x138 both read the labels.
     */
-  private[ext] def bandedLabels(s: SparkSession, dir: String): DataFrame = {
-    val (sb, bb) = resolveGeometry(s, dir, AdaptiveBits, AdaptiveBits)
-    val (repPairs, selfPass) = repBandedPairs(s, dir, 0.4, sb, bb)
-    val groups = vecGroupsAll(s, dir)
-    val connected = Dedup.connectedComponents(
-      repPairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-      .select(col("id").as("rep"), col("lbl"))
-    val cliques = selfPass.select(col("rep"))
-    val expandedConnected = connected.join(groups, "rep")
-      .join(cliques.withColumn("clq", lit(true)), Seq("rep"), "left")
-      .select(explode(
-        when(size(col("members")) === 1 || col("clq"), col("members"))
-          .otherwise(array(col("rep")))).as("vec_id"), col("lbl"))
-    val isolated = selfPass
-      .join(connected.select(col("rep")), Seq("rep"), "left_anti")
-      .select(explode(col("members")).as("vec_id"), col("rep").as("lbl"))
-    expandedConnected.unionByName(isolated)
-  }
+  private val labelCache = SessionMemo[String, DataFrame]("Similarity.bandedLabels")
+
+  private[ext] def bandedLabels(s: SparkSession, dir: String): DataFrame =
+    labelCache(s, dir) {
+      val (sb, bb) = resolveGeometry(s, dir, AdaptiveBits, AdaptiveBits)
+      val (repPairs, selfPass) = repBandedPairs(s, dir, 0.4, sb, bb)
+      val groups = vecGroupsAll(s, dir)
+      val connected = Dedup.connectedComponents(
+        repPairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+        .select(col("id").as("rep"), col("lbl"))
+      val cliques = selfPass.select(col("rep"))
+      val expandedConnected = connected.join(groups, "rep")
+        .join(cliques.withColumn("clq", lit(true)), Seq("rep"), "left")
+        .select(explode(
+          when(size(col("members")) === 1 || col("clq"), col("members"))
+            .otherwise(array(col("rep")))).as("vec_id"), col("lbl"))
+      val isolated = selfPass
+        .join(connected.select(col("rep")), Seq("rep"), "left_anti")
+        .select(explode(col("members")).as("vec_id"), col("rep").as("lbl"))
+      expandedConnected.unionByName(isolated).pinned
+    }
 
   /** Exact-cosine verification of a candidate pair frame (vec_a, vec_b)
     * against the corpus — the shared tail of every banded path: two

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
-import graft.engine.{Incremental, Parallel, Reliability, Sinks, Sources}
+import graft.engine.{CorpusArtifact, Incremental, Parallel, Reliability, SessionMemo, Sinks, Sources}
 
 /** The orchestration layer (SURVEY.md §2.10 O1-O5): the reference's
   * per-day DAG run — extract each staging table for the logical date,
@@ -130,14 +130,47 @@ object Pipeline {
     * staging layer currently holds. Tables whose staging input has never
     * loaded are skipped — the downstream targets simply don't appear yet
     * (the reference would have failed its transform task; we treat the
-    * run as partial).
+    * run as partial). A complete rebuild is recorded for
+    * [[transformAtomic]]: the staging state it read (fingerprinted before
+    * the read, so a write racing the read can only force a rebuild) and
+    * the outputs it wrote.
     */
-  def transform(spark: SparkSession, warehouseDir: String): Unit =
+  def transform(spark: SparkSession, warehouseDir: String): Unit = {
+    val read = fingerprint(spark, stagingRoots(warehouseDir))
     loadedStaging(spark, warehouseDir).foreach { stg =>
       val (dims, facts) = StarSchema.transforms.partition(_._1.startsWith("dim_"))
       Seq(dims, facts).foreach(wave => Parallel.map(wave) { case (name, fn) =>
         Sinks.truncateLoad(fn(stg), s"$warehouseDir/$name")
       })
+      for (r <- read; w <- fingerprint(spark, starRoots(warehouseDir)))
+        transformed.put(spark, warehouseDir, (r, w))
+    }
+  }
+
+  /** Per warehouse dir: the (staging, outputs) fingerprints of the last
+    * complete [[transform]].
+    */
+  private val transformed = SessionMemo[String, (String, String)]("Pipeline.transformed")
+
+  private def stagingRoots(warehouseDir: String): Seq[String] =
+    FkOrder.map(stgPath(warehouseDir, _))
+
+  private def starRoots(warehouseDir: String): Seq[String] =
+    StarSchema.transforms.map { case (name, _) => s"$warehouseDir/$name" }
+
+  /** The combined fingerprint of `roots`, or None while one is missing. */
+  private def fingerprint(spark: SparkSession, roots: Seq[String]): Option[String] =
+    try Some(roots.map(CorpusArtifact.pathFingerprint(spark, _)).mkString(","))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** Whether the 8 tables the last [[transform]] wrote still are the star
+    * of the current staging: neither the staging roots nor the outputs
+    * have changed since.
+    */
+  private[flights] def transformIsCurrent(spark: SparkSession, warehouseDir: String): Boolean =
+    transformed.get(spark, warehouseDir).exists { case (r, w) =>
+      fingerprint(spark, stagingRoots(warehouseDir)).contains(r) &&
+        fingerprint(spark, starRoots(warehouseDir)).contains(w)
     }
 
   /** Every staging table, or None while any of them has never loaded. */
@@ -158,13 +191,22 @@ object Pipeline {
     * sequential transform chain, and `transform` above, both expose a
     * half-updated warehouse in that window). Readers go through
     * `SnapshotSet.readTable(spark, s"$warehouseDir/star", name)`.
+    *
+    * When a [[transform]] of this session already built the star from the
+    * current staging and its 8 outputs are unchanged (`runFor` ends in
+    * one), the set commits those outputs instead of building all 8
+    * tables a second time; otherwise it rebuilds from staging.
     * Returns the published set version, or None when staging is
     * incomplete (the same partial-run skip as `transform`).
     */
-  def transformAtomic(spark: SparkSession, warehouseDir: String): Option[Long] =
+  def transformAtomic(spark: SparkSession, warehouseDir: String): Option[Long] = {
+    val current = transformIsCurrent(spark, warehouseDir)
     loadedStaging(spark, warehouseDir).map(stg =>
       graft.engine.SnapshotSet.publish(spark, s"$warehouseDir/star",
-        StarSchema.transforms.map { case (name, fn) => name -> fn(stg) }.toMap))
+        StarSchema.transforms.map { case (name, fn) =>
+          name -> (if (current) spark.read.parquet(s"$warehouseDir/$name") else fn(stg))
+        }.toMap))
+  }
 
   /** The reference's `catchup=True` backfill: ordered daily runs
     * (`max_active_runs=1`).

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Scalar-function surface (SURVEY.md §2.7): JSON extraction/serialization
@@ -612,6 +612,8 @@ object Scalars {
       .orderBy(col("event_type"), col("bucket"))
   }
 
+  private val basketCache = SessionMemo[String, DataFrame]("Scalars.baskets")
+
   /** Market-basket affinity (pairwise association rules): parts
     * co-ordered in the same order, with support counts and
     * lift = P(a,b) / (P(a)P(b)) = n_pair * n_orders / (n_a * n_b) —
@@ -631,12 +633,13 @@ object Scalars {
     // shuffled the items frame twice and sorted both sides; every i<j
     // pair of a sorted distinct basket IS every part_a < part_b pair,
     // bounded by basket size exactly like the join was). Baskets stay
-    // pinned: the frame feeds totals, marginals and pairs.
-    val baskets = t(s, dir, "lineitem")
+    // pinned, once per (session, dataset): the frame feeds totals,
+    // marginals and pairs.
+    val baskets = basketCache(s, dir)(t(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(sort_array(array_distinct(collect_list(col("l_partkey")))).as("parts"))
       .select(col("parts"))
-      .pinned
+      .pinned)
     val totals = baskets.agg(count(lit(1)).as("n_orders"))
     val marg = baskets.select(explode(col("parts")).as("l_partkey"))
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("n_part"))

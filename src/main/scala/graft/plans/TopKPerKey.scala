@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions.{col, count, lit, row_number, spark_partit
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.graft.PlanBridge
 
-import graft.engine.Tables
+import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
 
 /** Grouped bounded top-k as a CUSTOM PHYSICAL OPERATOR — the (c) tier of
@@ -209,31 +209,35 @@ object TopKPerKey {
       .orderBy(col("event_type"), col("value").desc, col("event_id"))
   }
 
+  private val rewriteCache = SessionMemo[(String, Int), DataFrame]("TopKPerKey.rewrite")
+
   /** x179: the WINDOW SPELLING, rewritten by [[TopKRewrite]] into the
     * custom operator — the "users keep their SQL" integration. The rule
     * is scoped to this materialization (ensured, eagerly checkpointed,
     * removed); the query REQUIRES the rewrite actually fired, so a
-    * silently-dead rule fails the gate rather than falling back.
+    * silently-dead rule fails the gate rather than falling back. The
+    * pinned result is built once per (session, dataset, k).
     */
-  def topkRewriteQuery(s: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    PlanBridge.ensureStrategy(s, TopKPerKeyStrategy)
-    PlanBridge.ensureOptimizerRule(s, TopKRewrite)
-    try {
-      val ev = Tables(s, dir, "events")
-        .select(col("event_type"), col("event_id"), col("user_id"), col("value"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"))
-        .orderBy(col("value").desc, col("event_id").asc)
-      val df = ev
-        .withColumn("rn",
-          org.apache.spark.sql.functions.row_number().over(w))
-        .filter(col("rn") <= k).drop("rn")
-        .orderBy(col("event_type"), col("value").desc, col("event_id"))
-      require(df.queryExecution.optimizedPlan.exists(_.isInstanceOf[TopKPerKeyPlan]),
-        s"TopKRewrite did not fire:\n${df.queryExecution.optimizedPlan}")
-      df.pinned // materialize while the rule is active
-    } finally PlanBridge.removeOptimizerRule(s, TopKRewrite)
-  }
+  def topkRewriteQuery(s: SparkSession, dir: String, k: Int = 5): DataFrame =
+    rewriteCache(s, (dir, k)) {
+      PlanBridge.ensureStrategy(s, TopKPerKeyStrategy)
+      PlanBridge.ensureOptimizerRule(s, TopKRewrite)
+      try {
+        val ev = Tables(s, dir, "events")
+          .select(col("event_type"), col("event_id"), col("user_id"), col("value"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("event_type"))
+          .orderBy(col("value").desc, col("event_id").asc)
+        val df = ev
+          .withColumn("rn",
+            org.apache.spark.sql.functions.row_number().over(w))
+          .filter(col("rn") <= k).drop("rn")
+          .orderBy(col("event_type"), col("value").desc, col("event_id"))
+        require(df.queryExecution.optimizedPlan.exists(_.isInstanceOf[TopKPerKeyPlan]),
+          s"TopKRewrite did not fire:\n${df.queryExecution.optimizedPlan}")
+        df.pinned // materialize while the rule is active
+      } finally PlanBridge.removeOptimizerRule(s, TopKRewrite)
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "x178_topk_exec" -> ((s: SparkSession, dir: String) => topkExecQuery(s, dir)),

@@ -103,4 +103,29 @@ class CorpusArtifactSpec extends SparkSpec {
       assert(gone.map(_.stripPrefix("file:")) === Seq(root))
     }
   }
+
+  test("a flat table keeps its per-file fingerprint; a partitioned tree lists every file") {
+    val dir = plant("fp")
+    // the per-file signature of a flat directory, as it was before
+    // subdirectories were listed: existing artifact roots must resolve
+    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sig = (fs.makeQualified(p).toString +:
+      fs.listStatus(p).toSeq.filter(_.isFile).sortBy(_.getPath.getName)
+        .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}"))
+      .mkString("|")
+    val flat = java.security.MessageDigest.getInstance("MD5")
+      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(CorpusArtifact.fingerprint(spark, dir) == flat)
+
+    import spark.implicits._
+    val tree = s"$dir/tree"
+    Seq(("a", 1), ("b", 2)).toDF("k", "p_date").write.partitionBy("p_date").parquet(tree)
+    val before = CorpusArtifact.pathFingerprint(spark, tree)
+    // a file added below the root changes nothing the root itself lists
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$tree/p_date=2/extra"), Array[Byte](1))
+    assert(CorpusArtifact.pathFingerprint(spark, tree) != before)
+    intercept[java.io.FileNotFoundException](
+      CorpusArtifact.pathFingerprint(spark, s"$dir/absent"))
+  }
 }

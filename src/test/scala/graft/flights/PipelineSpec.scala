@@ -137,4 +137,54 @@ class PipelineSpec extends SparkSpec {
       }
     }
   }
+
+  private def staging(wh: String): Map[String, DataFrame] =
+    Pipeline.FkOrder.map(t => t -> spark.read.parquet(s"$wh/stg/$t")).toMap
+
+  /** Every star table of the set published under `wh` equals the 8
+    * transforms rebuilt from the staging `wh` holds now.
+    */
+  private def assertPublishedIsRebuild(wh: String): Unit = {
+    val stg = staging(wh)
+    StarSchema.transforms.foreach { case (name, fn) =>
+      assert(canon(graft.engine.SnapshotSet.readTable(spark, s"$wh/star", name)) == canon(fn(stg)),
+        s"published $name differs from a rebuild")
+    }
+  }
+
+  test("transformAtomic after runFor commits the transform's outputs, equal to a rebuild") {
+    val wh = tmpDir()
+    Pipeline.backfill(spark, Fixtures.stg(spark), wh, Days)
+    assert(Pipeline.transformIsCurrent(spark, wh))
+    assert(Pipeline.transformAtomic(spark, wh).isDefined)
+    assertPublishedIsRebuild(wh)
+  }
+
+  test("a staging write after transform makes transformAtomic rebuild") {
+    val wh = tmpDir()
+    val src = Fixtures.stg(spark)
+    Pipeline.runFor(spark, src, wh, Days.head)
+    val built = canon(spark.read.parquet(s"$wh/dim_airport"))
+    // the next day's airports land in staging with no transform after them
+    graft.engine.Sinks.overwriteDayPartitions(
+      graft.engine.Incremental.dayWindow(src("airports_data"), "updated_at", Days(1)),
+      "updated_at", s"$wh/stg/airports_data")
+    assert(!Pipeline.transformIsCurrent(spark, wh))
+    Pipeline.transformAtomic(spark, wh)
+    assertPublishedIsRebuild(wh)
+    assert(canon(graft.engine.SnapshotSet.readTable(spark, s"$wh/star", "dim_airport")) != built,
+      "the day-2 airports should reach the published dim")
+  }
+
+  test("a changed star table makes transformAtomic rebuild") {
+    val wh = tmpDir()
+    Pipeline.runFor(spark, Fixtures.stg(spark), wh, Days.head)
+    val airports = spark.read.parquet(s"$wh/dim_airport")
+    val tampered = airports.limit(1).collect()
+    spark.createDataFrame(java.util.Arrays.asList(tampered: _*), airports.schema)
+      .write.mode("overwrite").parquet(s"$wh/dim_airport")
+    assert(!Pipeline.transformIsCurrent(spark, wh))
+    Pipeline.transformAtomic(spark, wh)
+    assertPublishedIsRebuild(wh)
+  }
 }
