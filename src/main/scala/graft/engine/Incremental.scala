@@ -69,12 +69,6 @@ object Incremental {
       .groupBy(keys.map(col): _*)
       .agg(combine.head, combine.tail: _*)
 
-  /** S2+S6+P3: windowed extract -> skip-on-empty -> idempotent
-    * day-partition overwrite into `path`. The increment is persisted for
-    * the count/write pair so both see the SAME snapshot (a re-scanned
-    * source could change between actions and make the returned row count
-    * disagree with what was written).
-    */
   /** Incremental JOIN maintenance (delta-join IVM): with an append-only
     * fact and a stable dimension, the enriched result for a new day is
     * old result ∪ (Δfact ⋈ dim) — the day's increment joins the
@@ -116,6 +110,12 @@ object Incremental {
       tsCol: String, ds: String): DataFrame =
     dayWindow(fact, tsCol, ds).join(dim, keys, "left_anti")
 
+  /** S2+S6+P3: windowed extract -> skip-on-empty -> idempotent
+    * day-partition overwrite into `path`. The increment is persisted for
+    * the count/write pair so both see the SAME snapshot (a re-scanned
+    * source could change between actions and make the returned row count
+    * disagree with what was written).
+    */
   def loadTableFor(source: DataFrame, tsCol: String, ds: String, path: String): LoadStatus = {
     val increment = dayWindow(source, tsCol, ds).persist()
     try {

@@ -54,8 +54,8 @@ object Tables {
 
   private def open(spark: SparkSession, p: String, name: String): DataFrame =
     if (name == "events") {
-      // Sessions should set this at construction (Verify/Bench/SparkSpec
-      // builders do); this is a fallback for ad-hoc sessions. It is
+      // Sessions should set this at construction (`GraftSession.local`
+      // does); this is a fallback for ad-hoc sessions. It is
       // checked first so an already-configured session is never mutated
       // mid-flight (the set is visible session-wide, not per-read).
       if (!spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))

@@ -72,13 +72,10 @@ object Clustering {
     * trick). k rows: the window is over the k survivors only.
     */
   private[ext] def seedCentroidsOf(pts: DataFrame, k: Int): DataFrame = {
-    val ranked = pts
-      .withColumn("h", TextAnalysis.tokenHash(
-        concat(lit("km:"), col("vec_id").cast("string"))))
-      .orderBy(col("h"), col("vec_id")).limit(k)
-    ranked.withColumn("cluster",
-        row_number().over(Window.orderBy(col("h"), col("vec_id"))).cast(LongType))
-      .select(col("cluster"), col("qa").as("ca"))
+    val hashed = pts.withColumn("h", TextAnalysis.tokenHash(
+      concat(lit("km:"), col("vec_id").cast("string"))))
+    TopKPerKey.ranked(hashed, Nil, Seq(col("h"), col("vec_id")), k, "cluster")
+      .select(col("cluster").cast(LongType).as("cluster"), col("qa").as("ca"))
   }
 
   /** One assignment pass: nearest centroid by exact integer distance,
@@ -600,14 +597,13 @@ object Clustering {
       k: Int, seedDims: Option[DataFrame] = None): DataFrame = {
     val sd = seedDims.getOrElse(sdims)
     val w = if (sdims.columns.contains("m")) col("m") else lit(1L)
-    val ranked = ids
+    val hashed = ids
       .crossJoin(broadcast(sd.select(col("sub")).distinct()))
       .withColumn("h", TextAnalysis.tokenHash(concat(lit(prefix),
         col("sub").cast("string"), lit(":"), col("vec_id").cast("string"))))
-      .withColumn("code", row_number().over(
-        Window.partitionBy(col("sub")).orderBy(col("h"), col("vec_id"))).cast(LongType))
-      .filter(col("code") <= k)
-      .select(col("vec_id"), col("sub"), col("code"))
+    val ranked = TopKPerKey.ranked(hashed, Seq(col("sub")), Seq(col("h"), col("vec_id")), k,
+        "code")
+      .select(col("vec_id"), col("sub"), col("code").cast(LongType).as("code"))
     val c0 = ranked.join(sd, Seq("vec_id", "sub"))
       .select(col("sub"), col("code"), col("j"), col("q").as("c"))
     val a1 = pqEncode(sdims, c0)
@@ -716,8 +712,7 @@ object Clustering {
       .select(explode(col("members")).as("vec_id"), col("total_qerr"))
     val corpus = repVec.join(groups.select(col("rep"), col("m")), "rep")
       .agg(sum(col("total_qerr") * col("m")).as("corpus_qerr"))
-    // two-phase global top-k: perVec is corpus-sized
-    TopKPerKey.twoPhase(perVec, Nil, Seq(col("total_qerr").desc, col("vec_id")), k)
+    TopKPerKey.ranked(perVec, Nil, Seq(col("total_qerr").desc, col("vec_id")), k)
       .crossJoin(broadcast(corpus))
       .select(col("rank"), col("vec_id"), col("total_qerr"), col("corpus_qerr"))
       .orderBy(col("rank"))
@@ -753,7 +748,7 @@ object Clustering {
     val adc = enc.join(broadcast(tab), Seq("sub", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("td")).as("adc_dist"))
-    val top = TopKPerKey.twoPhase(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
+    val top = TopKPerKey.ranked(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
     annotateWithExact(s, dir, top, numQueries, k)
       .select(col("query_id"), col("rank"), col("vec_id"),
         col("adc_dist"), col("exact_d2"), col("in_exact_topk"))
@@ -774,7 +769,7 @@ object Clustering {
       .join(qfull, Seq("sub", "j"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum((col("q") - col("qq")) * (col("q") - col("qq"))).as("exact_d2"))
-    val etop = TopKPerKey.twoPhase(exact, Seq(col("query_id")),
+    val etop = TopKPerKey.ranked(exact, Seq(col("query_id")),
       Seq(col("exact_d2"), col("vec_id")), k)
       .select(col("query_id"), col("vec_id"), lit(1L).as("in_exact"))
     top.join(exact, Seq("query_id", "vec_id"))
@@ -887,7 +882,7 @@ object Clustering {
       numQueries: Int = 3, k: Int = 10): DataFrame = {
     val adc = ivfpqServe(s, dir, cents, book, codes, nprobe, numQueries)
       .select(col("query_id"), col("vec_id"), col("cluster"), col("adc_dist"))
-    TopKPerKey.twoPhase(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
+    TopKPerKey.ranked(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cluster"),
         col("adc_dist"))
       .orderBy(col("query_id"), col("rank"))
@@ -923,14 +918,12 @@ object Clustering {
       book: DataFrame, codes: DataFrame, maxProbe: Int,
       numQueries: Int): DataFrame = {
     val qv = qvecs(s, dir).filter(col("vec_id") < numQueries)
-    val probed = qv.crossJoin(broadcast(cents))
+    val dists = qv.crossJoin(broadcast(cents))
       .select(col("vec_id").as("query_id"), col("cluster"),
         sqDist(col("qa"), col("ca")).as("dist"))
-      .withColumn("prn", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("dist"), col("cluster")))
-        .cast(LongType))
-      .filter(col("prn") <= maxProbe)
-      .select(col("query_id"), col("cluster"), col("prn"))
+    val probed = TopKPerKey.ranked(dists, Seq(col("query_id")),
+        Seq(col("dist"), col("cluster")), maxProbe, "prn")
+      .select(col("query_id"), col("cluster"), col("prn").cast(LongType).as("prn"))
     val csub = toSubDims(cents.select(col("cluster").as("vec_id"), col("ca").as("qa")), 8)
       .select(col("vec_id").as("cluster"), col("sub"), col("j"), col("q").as("c"))
     val qsub = toSubDims(qv, 8)
@@ -991,7 +984,7 @@ object Clustering {
     val rk = VersionedTable.read(s, s"$root/codes")
     val adc = ivfpqServe(s, dir, rc, rb, rk, nprobe, numQueries)
       .select(col("query_id"), col("vec_id"), col("cluster"), col("adc_dist"))
-    val top = TopKPerKey.twoPhase(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
+    val top = TopKPerKey.ranked(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
     annotateWithExact(s, dir, top, numQueries, k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cluster"),
         col("adc_dist"), col("exact_d2"), col("in_exact_topk"))
@@ -1002,7 +995,7 @@ object Clustering {
       numQueries: Int = 3, k: Int = 10): DataFrame = {
     val adc = ivfpqAdc(s, dir, kCoarse, nprobe, numQueries)
       .select(col("query_id"), col("vec_id"), col("cluster"), col("adc_dist"))
-    val top = TopKPerKey.twoPhase(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
+    val top = TopKPerKey.ranked(adc, Seq(col("query_id")), Seq(col("adc_dist"), col("vec_id")), k)
     annotateWithExact(s, dir, top, numQueries, k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("cluster"),
         col("adc_dist"), col("exact_d2"), col("in_exact_topk"))
@@ -1035,7 +1028,7 @@ object Clustering {
       .join(qfull, Seq("sub", "j"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum((col("q") - col("qq")) * (col("q") - col("qq"))).as("exact_d2"))
-    val etop = TopKPerKey.twoPhase(exact, Seq(col("query_id")),
+    val etop = TopKPerKey.ranked(exact, Seq(col("query_id")),
       Seq(col("exact_d2"), col("vec_id")), k)
       .select(col("query_id"), col("vec_id"), lit(1L).as("in_exact"))
       .pinned
@@ -1050,10 +1043,8 @@ object Clustering {
     val cand = adc.select(col("query_id"), col("vec_id"), col("adc_dist"),
       explode(sequence(col("prn").cast(LongType), lit(maxProbe.toLong)))
         .as("nprobe"))
-    val wp = Window.partitionBy(col("query_id"), col("nprobe"))
-      .orderBy(col("adc_dist").asc, col("vec_id"))
-    val sel = cand.withColumn("rank", row_number().over(wp))
-      .filter(col("rank") <= k)
+    val sel = TopKPerKey.ranked(cand, Seq(col("query_id"), col("nprobe")),
+      Seq(col("adc_dist").asc, col("vec_id")), k)
     val counts = sel.join(etop, Seq("query_id", "vec_id"), "left")
       .groupBy(col("nprobe"))
       .agg(count(lit(1)).as("n_ranked"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
+import graft.plans.TopKPerKey
 
 /** Entity-resolution operators over the `customer` dimension: an exact
   * edit-distance similarity self-join (x190, the ED-Join shape — Xiao,
@@ -240,11 +241,7 @@ object Linkage {
     // every true match, and the probe side still probes ALL its grams.
     // Fewer postings per string ⇒ proportionally fewer block-join
     // candidates (~40% at sf0.1), identical verified pair set.
-    val ridx = rare
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("key"))
-          .orderBy(col("df"), col("pos"))))
-      .filter(col("rk") <= Q * tau + 1)
+    val ridx = TopKPerKey.ranked(rare, Seq(col("key")), Seq(col("df"), col("pos")), Q * tau + 1)
       .select(col("key").as("i_key"), col("len"), col("pos"), col("g"))
       .pinned
     // strings with fewer than q·τ+1 rare grams cannot rely on the
@@ -710,16 +707,11 @@ object Linkage {
     * wider than the x191 output.
     */
   def mutualBestMatch(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val scored = fsLinkage(s, dir)
-    val bestOfClone = scored.withColumn("r1", row_number().over(
-        Window.partitionBy(col("clone_id"))
-          .orderBy(col("weight").desc, col("cand_custkey"))))
-      .filter(col("r1") === 1).drop("r1")
-    val bestOfCand = scored.withColumn("r2", row_number().over(
-        Window.partitionBy(col("cand_custkey"))
-          .orderBy(col("weight").desc, col("clone_id"))))
-      .filter(col("r2") === 1)
+    val bestOfClone = TopKPerKey.ranked(scored, Seq(col("clone_id")),
+        Seq(col("weight").desc, col("cand_custkey")), 1).drop("rank")
+    val bestOfCand = TopKPerKey.ranked(scored, Seq(col("cand_custkey")),
+        Seq(col("weight").desc, col("clone_id")), 1)
       .select(col("clone_id"), col("cand_custkey"))
     bestOfClone.join(bestOfCand, Seq("clone_id", "cand_custkey"))
       .select(col("clone_id"), col("cand_custkey").as("matched_custkey"),

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 import graft.engine.SessionMemo
 import graft.engine.Pin.PinOps
 import graft.functions.LongVec
+import graft.plans.TopKPerKey
 
 /** NN-descent k-NN graph construction over the `embeddings` table — the
   * build step of graph-based ANN serving (HNSW/NSG families all start
@@ -71,11 +72,10 @@ object NnGraph {
       .join(q.select(col("vec_id").as("nbr"), col("qa").as("na")), Seq("nbr"))
       .select(col("src"), col("nbr"), sqDist(col("sa"), col("na")).as("dist"))
 
-  /** Per-src best-k by pinned (dist, nbr) order. */
-  private def topK(d: DataFrame, k: Int): DataFrame =
-    d.withColumn("rk", row_number().over(
-        Window.partitionBy(col("src")).orderBy(col("dist"), col("nbr"))))
-      .filter(col("rk") <= k).drop("rk")
+  private val PerSrc = Seq(col("src"))
+
+  /** The graph's pinned per-src neighbor order. */
+  private val ByDist = Seq(col("dist"), col("nbr"))
 
   /** The standing-corpus predicate of the incremental lane (the x150
     * split convention): vec_id % 10 == 9 rows are the arrivals.
@@ -118,17 +118,16 @@ object NnGraph {
         .filter(col("l.vec_id") =!= col("r.vec_id"))
         .select(col("l.vec_id").as("src"), col("r.vec_id").as("nbr"))
         .distinct()
-      var e = topK(withDist(p0, q), k).pinned
+      var e = TopKPerKey.ranked(withDist(p0, q), PerSrc, ByDist, k).drop("rank").pinned
       (1 to rounds).foreach { r =>
         // undirected pool, degree-capped at 2k by a round-salted order
         // (the paper's reverse-neighbor sampling, pinned)
-        val u = e.select(col("src"), col("nbr"))
+        val pool = e.select(col("src"), col("nbr"))
           .union(e.select(col("nbr").as("src"), col("src").as("nbr")))
           .distinct()
-          .withColumn("rk", row_number().over(Window.partitionBy(col("src"))
-            .orderBy(h(concat(lit(s"nndu:$r:"), col("src"), lit(":"), col("nbr"))),
-              col("nbr"))))
-          .filter(col("rk") <= 2 * k).drop("rk")
+        val u = TopKPerKey.ranked(pool, PerSrc,
+            Seq(h(concat(lit(s"nndu:$r:"), col("src"), lit(":"), col("nbr"))), col("nbr")),
+            2 * k).drop("rank")
           .pinned
         // neighbors-of-neighbors ∪ pool ∪ current edges (the last term
         // makes per-node k-th distance monotone non-increasing)
@@ -138,7 +137,7 @@ object NnGraph {
           .union(u.select(col("src"), col("nbr")))
           .union(e.select(col("src"), col("nbr")))
           .distinct()
-        e = topK(withDist(cand, q), k).pinned
+        e = TopKPerKey.ranked(withDist(cand, q), PerSrc, ByDist, k).drop("rank").pinned
       }
       e
     }
@@ -178,11 +177,11 @@ object NnGraph {
       .orderBy(h(concat(lit("nndq:"), col("vec_id"))), col("vec_id"))
       .limit(sample)
       .select(col("vec_id").as("src"), col("qa").as("sa"))
-    val truth = topK(
-      q.select(col("vec_id").as("nbr"), col("qa").as("na"))
-        .crossJoin(broadcast(probesQ))
-        .filter(col("src") =!= col("nbr"))
-        .select(col("src"), col("nbr"), sqDist(col("sa"), col("na")).as("dist")), k)
+    val truthDist = q.select(col("vec_id").as("nbr"), col("qa").as("na"))
+      .crossJoin(broadcast(probesQ))
+      .filter(col("src") =!= col("nbr"))
+      .select(col("src"), col("nbr"), sqDist(col("sa"), col("na")).as("dist"))
+    val truth = TopKPerKey.ranked(truthDist, PerSrc, ByDist, k)
       .select(col("src"), col("nbr"))
     val approx = nnEdges(s, dir, k, rounds, buckets)
       .select(col("src"), col("nbr"))
@@ -288,7 +287,7 @@ object NnGraph {
       .join(arrivals.select(col("vec_id").as("src"), col("qa").as("sa")), Seq("src"))
       .join(standingQ.select(col("vec_id").as("nbr"), col("qa").as("na")), Seq("nbr"))
       .select(col("src"), col("nbr"), sqDist(col("sa"), col("na")).as("dist"))
-    topK(d, k)
+    TopKPerKey.ranked(d, PerSrc, ByDist, k).drop("rank")
   }
 
   /** x194: incremental graph insertion — the arrivals (vec_id % 10 == 9,
@@ -344,6 +343,8 @@ object NnGraph {
       .withColumn("eh", h(concat(lit("gse:"), col("vec_id").cast("string"))))
       .orderBy(col("eh"), col("vec_id")).limit(1)
       .select(col("vec_id").as("node"))
+    val perQid = Seq(col("qid"))
+    val byNodeDist = Seq(col("dist"), col("node"))
     def score(cand: DataFrame): DataFrame = cand
       .join(queries, Seq("qid"))
       .join(standing.select(col("vec_id").as("node"), col("qa").as("na")),
@@ -354,16 +355,11 @@ object NnGraph {
       val exp = frontier.as("f").join(kept.as("g"), col("f.node") === col("g.src"))
         .select(col("f.qid").as("qid"), col("g.nbr").as("node"))
       val cand = frontier.union(exp).distinct()
-      frontier = score(cand)
-        .withColumn("rk", row_number().over(Window.partitionBy(col("qid"))
-          .orderBy(col("dist"), col("node"))))
-        .filter(col("rk") <= beam).select(col("qid"), col("node"))
+      frontier = TopKPerKey.ranked(score(cand), perQid, byNodeDist, beam)
+        .select(col("qid"), col("node"))
         .pinned
     }
-    score(frontier)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("dist"), col("node"))))
-      .filter(col("rank") <= k)
+    TopKPerKey.ranked(score(frontier), perQid, byNodeDist, k)
       .select(col("qid").as("query_id"), col("rank"), col("node").as("node_id"),
         col("dist").as("dist_grid"),
         (sqrt(col("dist").cast(DoubleType)) / LongVec.Scale).as("l2"))

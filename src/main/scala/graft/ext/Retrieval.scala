@@ -25,8 +25,8 @@ import graft.plans.TopKPerKey
   * and the corpus-level stats are broadcast (queries are small by
   * definition); the candidate set is bounded by the postings of the query
   * terms — the classic impact-ordered-postings bound — and the top-k is
-  * the two-phase partition-local-prune-then-global-rank shape, never a
-  * single-partition sort of all candidates.
+  * one rank window per query (a partial WindowGroupLimit below its
+  * shuffle), never a single-partition sort of all candidates.
   */
 object Retrieval {
 
@@ -117,7 +117,7 @@ object Retrieval {
       .select(col("query_id"), col("doc_id"), okapiTsc(k1, b).as("tsc"))
 
   /** Full ranking from a prebuilt index: per-(query,doc) pinned-fold
-    * score sum, then the two-phase top-k — public so the streaming
+    * score sum, then the per-query top-k — public so the streaming
     * ingest's snapshot-derived index serves through the same path the
     * batch queries gate.
     */
@@ -128,7 +128,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_hit_terms"),
         aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
           .as("score"))
-    TopKPerKey.twoPhase(perDoc, PerQuery, byDesc("score"), k)
+    TopKPerKey.ranked(perDoc, PerQuery, byDesc("score"), k)
       .select(col("query_id"), col("doc_id"), col("n_hit_terms"), col("score"),
         col("rank"))
       .orderBy(col("query_id"), col("rank"))
@@ -213,7 +213,7 @@ object Retrieval {
     *  3. Candidates = documents with at least one essential-term
     *     posting; score them FULLY (all query terms) through the exact
     *     x123 pipeline — same expression tree, same pinned ascending
-    *     fold — then the two-phase top-k.
+    *     fold — then the per-query top-k.
     *
     * The 100 TB shape: the corpus-sized joins touch only the seed
     * postings (rarest terms — the shortest lists), the essential-term
@@ -262,10 +262,8 @@ object Retrieval {
     val qt = qterms.join(ix.df, Seq("term")).join(bounds, Seq("term"))
       .select(col("query_id"), col("term"), col("df"), col("ub"))
       .pinned // queries × query-vocab: tiny by definition
-    val seedWin = Window.partitionBy(col("query_id"))
-      .orderBy(col("df").asc, col("term").asc)
-    val seed = qt.withColumn("srn", row_number().over(seedWin))
-      .filter(col("srn") <= seedTerms).select(col("query_id"), col("term"))
+    val seed = TopKPerKey.ranked(qt, PerQuery, Seq(col("df").asc, col("term").asc), seedTerms)
+      .select(col("query_id"), col("term"))
     val seedCand = ix.tf.join(broadcast(seed), Seq("term"))
       .filter(col("doc_id") =!= col("query_id"))
       .select(col("query_id"), col("doc_id")).distinct()
@@ -279,7 +277,7 @@ object Retrieval {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
         .as("pscore"))
-    val thetaRows = TopKPerKey.twoPhase(partial, PerQuery, byDesc("pscore"), k)
+    val thetaRows = TopKPerKey.ranked(partial, PerQuery, byDesc("pscore"), k)
       .filter(col("rank") === k)
       .select(col("query_id"), col("pscore").as("theta"))
     val theta = qt.select(col("query_id")).distinct()
@@ -319,7 +317,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_hit_terms"),
         aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
           .as("score"))
-    val result = TopKPerKey.twoPhase(perDoc, PerQuery, byDesc("score"), k)
+    val result = TopKPerKey.ranked(perDoc, PerQuery, byDesc("score"), k)
       .select(col("query_id"), col("doc_id"), col("n_hit_terms"), col("score"),
         col("rank"))
       .orderBy(col("query_id"), col("rank"))
@@ -469,7 +467,7 @@ object Retrieval {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
         .as("score"))
-    TopKPerKey.twoPhase(perDoc, PerQuery, byDesc("score"), poolK)
+    TopKPerKey.ranked(perDoc, PerQuery, byDesc("score"), poolK)
       .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
   }
 
@@ -481,7 +479,7 @@ object Retrieval {
       poolK: Int): DataFrame = {
     val scored = Similarity.exactScored(Similarity.corpus(s, dir), numQueries)
       .withColumnRenamed("vec_id", "doc_id")
-    TopKPerKey.twoPhase(scored, PerQuery, byDesc("cosine"), poolK)
+    TopKPerKey.ranked(scored, PerQuery, byDesc("cosine"), poolK)
       .select(col("query_id"), col("doc_id"), col("rank").as("sem_rank"))
   }
 
@@ -502,7 +500,7 @@ object Retrieval {
       .select(col("query_id"), col("doc_id"), col("lex_rank"), col("sem_rank"),
         (coalesce(lit(1.0) / (lit(60) + col("lex_rank")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(60) + col("sem_rank")), lit(0.0))).as("rrf_score"))
-    TopKPerKey.twoPhase(fused, PerQuery, byDesc("rrf_score"), k)
+    TopKPerKey.ranked(fused, PerQuery, byDesc("rrf_score"), k)
       .select(col("query_id"), col("doc_id"), col("lex_rank"), col("sem_rank"),
         col("rrf_score"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
@@ -566,7 +564,7 @@ object Retrieval {
       poolN: Int, k: Int): DataFrame = {
     val c = Similarity.corpus(s, dir)
     val scored = Similarity.exactScored(c, numQueries).withColumnRenamed("vec_id", "doc_id")
-    val pool = TopKPerKey.twoPhase(scored, PerQuery, byDesc("cosine"), poolN)
+    val pool = TopKPerKey.ranked(scored, PerQuery, byDesc("cosine"), poolN)
       .select(col("query_id"), col("doc_id"), col("cosine").as("rel"))
     // r19 optimization round: the greedy selection runs on the DRIVER
     // over the collected pool. The pool is PARAMETER-bounded —
@@ -776,10 +774,7 @@ object Retrieval {
       .groupBy(col("query_id"), col("term"))
       .agg(aggregate(array_sort(collect_list(d(col("tf")) / d(col("dl")))),
         lit(0.0), (a, v) => a + v).as("w"))
-    val expWin = Window.partitionBy(col("query_id"))
-      .orderBy(col("w").desc, col("term"))
-    val exp = cand.withColumn("rn", row_number().over(expWin))
-      .filter(col("rn") <= expK)
+    val exp = TopKPerKey.ranked(cand, PerQuery, Seq(col("w").desc, col("term")), expK)
       .select(col("query_id"), col("term"), lit(beta).as("wt"))
     val wq = q.withColumn("wt", lit(1.0)).unionByName(exp)
     val scored = ix.tf.join(broadcast(wq), Seq("term"))
@@ -793,7 +788,7 @@ object Retrieval {
       .agg(count(lit(1)).as("n_hit_terms"),
         aggregate(array_sort(collect_list(col("tsc"))), lit(0.0), (a, v) => a + v)
           .as("score"))
-    TopKPerKey.twoPhase(perDoc, PerQuery, byDesc("score"), k)
+    TopKPerKey.ranked(perDoc, PerQuery, byDesc("score"), k)
       .select(col("query_id"), col("doc_id"), col("n_hit_terms"), col("score"),
         col("rank"))
       .orderBy(col("query_id"), col("rank"))

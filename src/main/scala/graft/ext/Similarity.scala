@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -23,8 +22,8 @@ import graft.plans.TopKPerKey
   *
   * Scale notes (the 100 TB story):
   *   - the query set is broadcast — the corpus is never shuffled to score;
-  *   - top-k is two-phase: partition-local row_number prunes to k per
-  *     (query, partition) before the per-query shuffle, so the global
+  *   - top-k is one `row_number` window, which Spark plans with a
+  *     partial WindowGroupLimit before the per-query shuffle, so the
   *     rank sees |queries| x partitions x k rows, not |corpus| rows;
   *   - LSH projections are relational (explode + broadcast-join the tiny
   *     hyperplane table + two codegen'd hash-aggregates), not interpreted
@@ -105,7 +104,7 @@ object Similarity {
 
   private def cosineTopkPlan(s: SparkSession, dir: String,
       numQueries: Int, k: Int): DataFrame =
-    TopKPerKey.twoPhase(exactScored(corpus(s, dir), numQueries), PerQuery, ByCosine, k)
+    TopKPerKey.ranked(exactScored(corpus(s, dir), numQueries), PerQuery, ByCosine, k)
       .orderBy(col("query_id"), col("rank"))
 
   /** (query_id, vec_id, cosine) for every query vector (vec_id <
@@ -123,8 +122,8 @@ object Similarity {
     * at-scale payoff: the coarse pass can run over a `dims`-wide
     * COLUMN-PRUNED projection of the corpus (a fraction of the scan and
     * broadcast bytes), and the full vectors are only touched for
-    * coarseK candidates per query. Deterministic two-phase selection —
-    * both phases total-order by (score desc, vec_id) — so the result is
+    * coarseK candidates per query. Deterministic two-stage selection —
+    * both stages total-order by (score desc, vec_id) — so the result is
     * oracle-checkable, unlike recall-bounded ANN.
     */
   def truncatedRerank(s: SparkSession, dir: String, dims: Int = 16,
@@ -140,14 +139,10 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), col("embedding"), col("nrm"),
         col("qv"), col("qn"),
         (dotD(col("qv_t"), col("emb_t")) / (col("qn_t") * col("nrm_t"))).as("coarse_cosine"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("coarse_cosine").desc, col("vec_id"))
-    val rer = coarse.withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= coarseK)
+    val rer = TopKPerKey.ranked(coarse, PerQuery,
+        Seq(col("coarse_cosine").desc, col("vec_id")), coarseK, "crank")
       .select(col("query_id"), col("vec_id"), cosine().as("cosine"))
-    val wg = Window.partitionBy(col("query_id")).orderBy(ByCosine: _*)
-    rer.withColumn("rank", row_number().over(wg))
-      .filter(col("rank") <= k)
+    TopKPerKey.ranked(rer, PerQuery, ByCosine, k)
       .select(col("query_id"), col("vec_id"), col("cosine"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -162,7 +157,7 @@ object Similarity {
       .join(c, "vec_id")
       .join(broadcast(queryVecs(c, numQueries)), "query_id")
       .select(col("query_id"), col("vec_id"), cosine().as("cosine"))
-    TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k).orderBy(col("query_id"), col("rank"))
+    TopKPerKey.ranked(scored, PerQuery, ByCosine, k).orderBy(col("query_id"), col("rank"))
   }
 
   /** Deterministic Gaussian hyperplanes as a (tbl)(bit)(pos) tensor —
@@ -327,7 +322,7 @@ object Similarity {
       .dropDuplicates("query_id", "vec_id")
       .join(broadcast(qv), "query_id")
       .select(col("query_id"), col("vec_id"), cosine().as("cosine"))
-    TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k).orderBy(col("query_id"), col("rank"))
+    TopKPerKey.ranked(scored, PerQuery, ByCosine, k).orderBy(col("query_id"), col("rank"))
   }
 
   /** The driver-gated form of an approximate top-k (the q29/q41
@@ -434,7 +429,7 @@ object Similarity {
     * order-independent, so the ranking is bit-identical across engines
     * and partitionings with the vec_id tie-break — integer ties are
     * COMMON under quantization, which is exactly why the audit must be
-    * integer-exact), two-phase top-k, then the per-query overlap with
+    * integer-exact), per-query top-k, then the per-query overlap with
     * the float exact top-k (the session-cached x20 ranking). The
     * quantized-serving go/no-go a retrieval stack reads: top-1 id +
     * integer score and |int8 top-k ∩ float top-k| per query.
@@ -449,7 +444,7 @@ object Similarity {
       .select(col("query_id"), col("vec_id"),
         aggregate(zip_with(col("qq"), col("q8"), (x, y) => x * y),
           lit(0L), (acc, v) => acc + v).as("idot"))
-    val topk = TopKPerKey.twoPhase(scored, PerQuery, Seq(col("idot").desc, col("vec_id")), k)
+    val topk = TopKPerKey.ranked(scored, PerQuery, Seq(col("idot").desc, col("vec_id")), k)
     val ref = cosineTopk(s, dir, numQueries, k).select(col("query_id"), col("vec_id"))
     val overlap = topk.join(ref, Seq("query_id", "vec_id"), "left_semi")
       .groupBy(col("query_id")).agg(count(lit(1)).as("n_overlap"))
@@ -501,15 +496,13 @@ object Similarity {
         aggregate(zip_with(col("qsig"), col("sig"),
             (x, y) => bit_count(x.bitwiseXOR(y)).cast(LongType)),
           lit(0L), (acc, v) => acc + v).as("hamming"))
-    val pool = TopKPerKey.twoPhase(ham, PerQuery, Seq(col("hamming"), col("vec_id")), poolR,
+    val pool = TopKPerKey.ranked(ham, PerQuery, Seq(col("hamming"), col("vec_id")), poolR,
         "hrank")
       .select(col("query_id"), col("vec_id"), col("hamming"))
     val rescored = c.join(broadcast(pool), Seq("vec_id"))
       .join(broadcast(queryVecs(c, numQueries)), Seq("query_id"))
       .select(col("query_id"), col("vec_id"), col("hamming"), cosine().as("cosine"))
-    val w = Window.partitionBy(col("query_id")).orderBy(ByCosine: _*)
-    rescored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    TopKPerKey.ranked(rescored, PerQuery, ByCosine, k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("hamming"), col("cosine"))
       .orderBy(col("query_id"), col("rank"))
   }
@@ -545,7 +538,7 @@ object Similarity {
       sum(when(col("k_occ") === 0L, 1L).otherwise(0L)).as("n_antihubs"),
       max(col("k_occ")).as("max_k_occ"),
       count(lit(1)).as("n_vectors"))
-    TopKPerKey.twoPhase(occFull, Nil, Seq(col("k_occ").desc, col("vec_id")), topHubs)
+    TopKPerKey.ranked(occFull, Nil, Seq(col("k_occ").desc, col("vec_id")), topHubs)
       .crossJoin(broadcast(summary))
       .select(col("rank"), col("vec_id"), col("k_occ"),
         col("n_antihubs"), col("max_k_occ"), col("n_vectors"))
@@ -1726,24 +1719,9 @@ object Similarity {
       .start()
   }
 
-  /** kNN label-consistency evaluation — the standard embedding-quality
-    * audit (does neighborhood structure agree with labels?): for each
-    * query vector, the majority label among its k exact-cosine nearest
-    * neighbors (ties broken toward the smaller label, rank ties toward
-    * the smaller vec_id — total orders, so the frame hash-gates),
-    * scored against the query's own label and reduced per label to
-    * (n_queries, n_correct, accuracy). The per-query leg is the x20
-    * broadcast shape: queries broadcast, the corpus is never shuffled
-    * to score, partition-local row_number pre-prunes to k per
-    * (query, partition) before the per-query rank.
-    */
   /** The k-nearest labeled neighbors of every query, ranked — shared by
-    * x105's majority vote and x110's MRR. Two-phase top-k (the x20
-    * discipline): partition-local row_number prunes to k per (query,
-    * partition) BEFORE the per-query shuffle — the global window sees
-    * |queries| x partitions x k rows, never the scored corpus (a
-    * 50-partition window over the full corpus is the q77 straggler
-    * shape).
+    * x105's majority vote and x110's MRR. Per-query top-k (the x20
+    * discipline).
     */
   private def knnRanked(s: SparkSession, dir: String,
       numQueries: Int, k: Int): DataFrame = {
@@ -1756,19 +1734,25 @@ object Similarity {
     val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("query_label"), col("vec_id"), col("label"),
         cosine().as("cosine"))
-    TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k)
+    TopKPerKey.ranked(scored, PerQuery, ByCosine, k)
   }
 
+  /** kNN label-consistency evaluation — the standard embedding-quality
+    * audit (does neighborhood structure agree with labels?): for each
+    * query vector, the majority label among its k exact-cosine nearest
+    * neighbors (ties broken toward the smaller label, rank ties toward
+    * the smaller vec_id — total orders, so the frame hash-gates),
+    * scored against the query's own label and reduced per label to
+    * (n_queries, n_correct, accuracy). The per-query leg is the x20
+    * broadcast shape: queries broadcast, the corpus is never shuffled
+    * to score.
+    */
   def knnLabelEval(s: SparkSession, dir: String,
       numQueries: Int = 50, k: Int = 10): DataFrame = {
     val votes = knnRanked(s, dir, numQueries, k)
       .groupBy(col("query_id"), col("query_label"), col("label"))
       .agg(count(lit(1)).as("n_votes"))
-    val maj = Window.partitionBy(col("query_id"))
-      .orderBy(col("n_votes").desc, col("label"))
-    votes
-      .withColumn("mr", row_number().over(maj))
-      .filter(col("mr") === 1)
+    TopKPerKey.ranked(votes, PerQuery, Seq(col("n_votes").desc, col("label")), 1)
       .groupBy(col("query_label"))
       .agg(count(lit(1)).as("n_queries"),
         sum(when(col("label") === col("query_label"), 1L).otherwise(0L))
@@ -1810,12 +1794,11 @@ object Similarity {
     * x105/x110: for each query, the k highest-cosine corpus vectors
     * whose label DIFFERS from the query's (the "confusable" examples a
     * retrieval/embedding trainer wants as negatives; easy random
-    * negatives teach nothing). Same broadcast-query shape and two-phase
-    * top-k as `knnRanked` — the corpus never shuffles, a partition-local
-    * row_number prefilter bounds what reaches the per-query window —
-    * and the same bitwise-cosine discipline (native `dotD` strict fold),
-    * so the float ranking hash-gates cross-engine. Ties break by vec_id:
-    * a total order.
+    * negatives teach nothing). Same broadcast-query shape and per-query
+    * top-k as `knnRanked` — the corpus never shuffles — and the same
+    * bitwise-cosine discipline (native `dotD` strict fold), so the float
+    * ranking hash-gates cross-engine. Ties break by vec_id: a total
+    * order.
     */
   def hardNegatives(s: SparkSession, dir: String,
       numQueries: Int = 20, k: Int = 10): DataFrame = {
@@ -1840,7 +1823,7 @@ object Similarity {
     val scored = e.join(broadcast(q), col("label") =!= col("query_label"))
       .select(col("query_id"), col("query_label"), col("vec_id"),
         col("label").as("neg_label"), cosine().as("cosine"))
-    TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k)
+    TopKPerKey.ranked(scored, PerQuery, ByCosine, k)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1848,7 +1831,7 @@ object Similarity {
     * (vec_id, label, embedding) — the shape of an embedding trainer's
     * in-flight batch — each micro-batch mined against the standing
     * labeled corpus by the exact x112 plan (`hardNegativesForQueries`:
-    * queries broadcast, corpus never shuffles, two-phase top-k) and
+    * queries broadcast, corpus never shuffles, per-query top-k) and
     * published as one [[graft.engine.VersionedTable]] snapshot keyed by
     * batchId. `commitIfAbsent` turns an at-least-once replay into a
     * skipped commit (the streamingBandProbe discipline), so the
@@ -1896,7 +1879,7 @@ object Similarity {
           col("nrm").as("qn"))
       val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"), cosine(col("emb")).as("cosine"))
-      val topd = TopKPerKey.twoPhase(scored, PerQuery, ByCosine, k)
+      val topd = TopKPerKey.ranked(scored, PerQuery, ByCosine, k)
         .select(col("query_id"), col("vec_id"))
       val hits = topd.join(full, Seq("query_id", "vec_id"), "left_semi")
       full.agg(count(lit(1)).cast(LongType).as("n_exact"))
@@ -1941,10 +1924,8 @@ object Similarity {
         .otherwise(col("dot").cast(DoubleType)
           / (sqrt(col("n2v").cast(DoubleType)) * sqrt(col("n2c").cast(DoubleType))))
         .as("loo_cosine"))
-    val w = Window.partitionBy(col("label"))
-      .orderBy(col("loo_cosine").asc_nulls_first, col("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= m)
+    TopKPerKey.ranked(scored, Seq(col("label")),
+        Seq(col("loo_cosine").asc_nulls_first, col("vec_id")), m)
       .select(col("label"), col("rank"), col("vec_id"), col("loo_cosine"))
       .orderBy(col("label"), col("rank"))
   }
@@ -2050,9 +2031,8 @@ object Similarity {
         (covg / lit(1099511627776.0)).as("cov"),
         (covg / (stdg(col("sq_i"), col("sq2_i"), col("n"))
           * stdg(col("sq_j"), col("sq2_j"), col("n")))).as("corr"))
-    val w = Window.orderBy(abs(col("corr")).desc, col("dim_i"), col("dim_j"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topPairs)
+    TopKPerKey.ranked(scored, Nil, Seq(abs(col("corr")).desc, col("dim_i"), col("dim_j")),
+        topPairs)
       .select(col("rank"), col("dim_i"), col("dim_j"), col("n"), col("cov"), col("corr"))
       .orderBy(col("rank"))
   }

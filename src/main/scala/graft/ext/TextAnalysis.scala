@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
+import graft.plans.TopKPerKey
 
 /** Text-analysis operators for LLM training-data pipelines over the
   * `documents` table: token counting, quality scoring, language ID, and
@@ -649,7 +650,6 @@ object TextAnalysis {
     */
   def tfidfTopTerms(s: SparkSession, dir: String,
       maxDocId: Int = 20, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = t(s, dir, "documents")
       .select(col("doc_id"), explode(wsTokens(lower(col("text")))).as("term"))
     val tf = toks.filter(col("doc_id") < maxDocId)
@@ -657,13 +657,10 @@ object TextAnalysis {
     val df = toks.select(col("doc_id"), col("term")).distinct()
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = t(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf").desc, col("term"))
-    tf.join(df, "term").crossJoin(n)
+    val scored = tf.join(df, "term").crossJoin(n)
       .withColumn("tfidf",
         (col("tf") * col("n_docs")).cast(DoubleType) / col("df").cast(DoubleType))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    TopKPerKey.ranked(scored, Seq(col("doc_id")), Seq(col("tfidf").desc, col("term")), k)
       .select(col("doc_id"), col("rank"), col("term"), col("tf"), col("df"), col("tfidf"))
       .orderBy(col("doc_id"), col("rank"))
   }
@@ -1463,10 +1460,8 @@ object TextAnalysis {
         .select(col("word"), (lit(150000000L) +
           expr("(85 * coalesce(contrib, 0)) DIV 100")).as("rank_q"))
     }
-    val top = pr.join(deg.select(col("src").as("word"), col("degree")), Seq("word"))
-      .orderBy(col("rank_q").desc, col("word")).limit(topN)
-    top.withColumn("pos", row_number().over(
-        Window.orderBy(col("rank_q").desc, col("word"))).cast("int"))
+    val scored = pr.join(deg.select(col("src").as("word"), col("degree")), Seq("word"))
+    TopKPerKey.ranked(scored, Nil, Seq(col("rank_q").desc, col("word")), topN, "pos")
       .select(col("pos"), col("word"), col("degree"), col("rank_q"),
         (col("rank_q").cast("double") / 1e9).as("rank"))
       .orderBy(col("pos"))

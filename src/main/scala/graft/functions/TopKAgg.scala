@@ -7,11 +7,11 @@ import org.apache.spark.sql.expressions.Aggregator
   * highest-scoring (score, id) pairs per group with ties broken by the
   * smaller id.
   *
-  * Scale rationale: a window `row_number <= k` must shuffle EVERY row of
-  * a group to one task before ranking; this Aggregator's partial buffers
-  * never exceed k entries, so map-side combine reduces the shuffle to
-  * k rows per (group, partition) — the same two-phase idea as
-  * `graft.plans.TopKPerKey.twoPhase`, packaged as a reusable typed aggregate.
+  * Scale rationale: this Aggregator's partial buffers never exceed k
+  * entries, so map-side combine reduces the shuffle to k rows per
+  * (group, partition) — the bound Spark's partial WindowGroupLimit gives
+  * the `row_number <= k` window (`graft.plans.TopKPerKey.ranked`),
+  * packaged as a reusable typed aggregate.
   */
 final case class Scored(score: Double, id: Long)
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DoubleType
 
 import graft.engine.{SessionMemo, Tables}
 import graft.engine.Pin.PinOps
+import graft.plans.TopKPerKey
 
 /** Graph analytics beyond connected components (x47/x57): PageRank over
   * the part co-purchase graph — "which products sit at the center of
@@ -48,15 +49,11 @@ object Graph {
     * mega-order through it.
     */
   private[ops] def cappedItems(s: SparkSession, dir: String, maxBasket: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val items = Tables(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")).distinct()
     val freq = items.groupBy(col("l_partkey")).agg(count(lit(1)).as("pf"))
-    val byOrder = Window.partitionBy(col("l_orderkey"))
-      .orderBy(col("pf").desc, col("l_partkey"))
-    items.join(freq, "l_partkey")
-      .withColumn("rn", row_number().over(byOrder))
-      .filter(col("rn") <= maxBasket)
+    TopKPerKey.ranked(items.join(freq, "l_partkey"), Seq(col("l_orderkey")),
+        Seq(col("pf").desc, col("l_partkey")), maxBasket)
       .select(col("l_orderkey"), col("l_partkey"))
   }
 
@@ -225,14 +222,11 @@ object Graph {
     var lbl = nodes.select(col("src").as("part"), col("src").as("label"))
       .pinned
     (1 to iters).foreach { _ =>
-      val byNode = Window.partitionBy(col("part"))
-        .orderBy(col("c").desc, col("label"))
-      val pick = lbl
+      val votes = lbl
         .join(edges, lbl("part") === edges("src"))
         .select(col("dst").as("part"), col("label"))
         .groupBy(col("part"), col("label")).agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(byNode))
-        .filter(col("rn") === 1)
+      val pick = TopKPerKey.ranked(votes, Seq(col("part")), Seq(col("c").desc, col("label")), 1)
         .select(col("part"), col("label").as("new_label"))
       lbl = lbl.join(pick, Seq("part"), "left")
         .select(col("part"), coalesce(col("new_label"), col("label")).as("label"))

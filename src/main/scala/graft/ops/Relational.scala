@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 import graft.engine.Tables
+import graft.plans.TopKPerKey
 
 /** Relational operator suite over the TPC-H-ish test tables.
   *
@@ -188,11 +189,8 @@ object Relational {
     * monotonically_increasing_id — not reproducible by an oracle).
     */
   def windowLatestOrder(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate").desc, col("o_orderkey").desc)
-    t(s, dir, "orders")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    TopKPerKey.ranked(t(s, dir, "orders"), Seq(col("o_custkey")),
+        Seq(col("o_orderdate").desc, col("o_orderkey").desc), 1)
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"))
       .orderBy(col("o_custkey"))
   }

@@ -454,10 +454,10 @@ object Sketches {
   // -------------------------------------------------------------------
 
   /** Per-(source, pair) KMV set algebra over pre-hashed elements
-    * (source, h): per-source bottom-k sketches (two-phase: partition-
-    * local k-smallest prune, then the global rank — no all-elements
-    * single-reducer sort), then for every source pair the classic KMV
-    * estimators (Bar-Yossef et al. RANDOM'02; Beyer et al. SIGMOD'07):
+    * (source, h): per-source bottom-k sketches (one rank window per
+    * source — no all-elements single-reducer sort), then for every
+    * source pair the classic KMV estimators (Bar-Yossef et al.
+    * RANDOM'02; Beyer et al. SIGMOD'07):
     *
     *   - union sketch = bottom-k of the two sketches' union (a k-sized
     *     merge — sketch algebra never touches the corpus again);
@@ -493,8 +493,7 @@ object Sketches {
     * is the overlap join the sketch exists to avoid.
     */
   def bottomkPairs(el: DataFrame, k: Int, withAnchor: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sk = TopKPerKey.twoPhase(el, Seq(col("source")), Seq(col("h").asc), k)
+    val sk = TopKPerKey.ranked(el, Seq(col("source")), Seq(col("h").asc), k)
       .select(col("source"), col("h"))
       .pinned // k rows per source: the published sketches
     // one row per source — checkpoint so the twin n_a/n_b joins don't
@@ -510,10 +509,8 @@ object Sketches {
     val ub = prs.join(sk, col("source") === col("source_b"))
       .select(col("source_a"), col("source_b"), col("h"))
     val u = ua.unionByName(ub).distinct()
-    val unionW = Window.partitionBy(col("source_a"), col("source_b"))
-      .orderBy(col("h").asc)
     // ≤ 2k rows per pair by construction — the window is sketch-sized
-    val kk = u.withColumn("rn", row_number().over(unionW)).filter(col("rn") <= k)
+    val kk = TopKPerKey.ranked(u, Seq(col("source_a"), col("source_b")), Seq(col("h").asc), k)
       .select(col("source_a"), col("source_b"), col("h"))
     val skA = sk.select(col("source").as("source_a"), col("h"), lit(1).as("in_a"))
     val skB = sk.select(col("source").as("source_b"), col("h"), lit(1).as("in_b"))

@@ -150,26 +150,18 @@ object TopKPerKey {
     PlanBridge.ofRows(spark, TopKPerKeyPlan(keyExprs, sortOrders, k, child))
   }
 
-  /** Per-key top-k as the two-phase WINDOW spelling: rank within (keys,
-    * input partition) and keep <= k, then rank within keys and keep
-    * <= k. Any row among a key's global k best is among its partition's
-    * k best, so the result equals the single `row_number` window, but
-    * the global window sees at most k·partitions rows per key — never
-    * a whole key group on one reducer. Empty `keys` is a global top-k.
-    * Returns `df`'s columns plus `rankCol` (1-based under `order`, which
-    * should be a total order for a deterministic choice among ties).
+  /** Per-key top-k as one `row_number` window: rank within `keys` under
+    * `order` and keep rank <= k. Spark plans the filtered window with a
+    * partition-local WindowGroupLimit below the exchange (at most k rows
+    * per key per partition shuffle) and, for empty `keys` (a global
+    * top-k), a TakeOrderedAndProject. Returns `df`'s columns plus
+    * `rankCol` (1-based under `order`, which should be a total order
+    * for a deterministic choice among ties).
     */
-  def twoPhase(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int,
-      rankCol: String = "rank"): DataFrame = {
-    val local = Window.partitionBy(keys :+ col("_part"): _*).orderBy(order: _*)
-    val global = Window.partitionBy(keys: _*).orderBy(order: _*)
-    df.withColumn("_part", spark_partition_id())
-      .withColumn("_lrank", row_number().over(local))
-      .filter(col("_lrank") <= k)
-      .withColumn(rankCol, row_number().over(global))
+  def ranked(df: DataFrame, keys: Seq[Column], order: Seq[Column], k: Int,
+      rankCol: String = "rank"): DataFrame =
+    df.withColumn(rankCol, row_number().over(Window.partitionBy(keys: _*).orderBy(order: _*)))
       .filter(col(rankCol) <= k)
-      .drop("_part", "_lrank")
-  }
 
   /** A 1-based global row number `numCol` under `order` WITHOUT a global
     * window: range-partition on `order`, number rows within each

@@ -1,13 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.LongType
 
 import graft.engine.{Tables, VersionedTable}
 import graft.ext.TextAnalysis
+import graft.plans.TopKPerKey
 
 /** Continuous corpus ingestion — the documents-lane streaming form the
   * events (EventStream) and embeddings (streamingBandProbe /
@@ -43,14 +43,12 @@ object CorpusIngest {
     * batch semantics without a stream.
     */
   def acceptBatch(batch: DataFrame, standingFps: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-    batch
+    val ok = batch
       .filter(TextAnalysis.qualityOkCol(col("text")))
       .select(col("doc_id"), col("text"),
         size(TextAnalysis.wsTokens(col("text"))).cast(LongType).as("n_tokens"),
         TextAnalysis.fingerprintCol(col("text")).as("fp"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+    TopKPerKey.ranked(ok, Seq(col("fp")), Seq(col("doc_id")), 1)
       .join(standingFps.select(col("fp")).distinct(), Seq("fp"), "left_anti")
       .select(col("doc_id"), col("n_tokens"), col("fp"))
   }

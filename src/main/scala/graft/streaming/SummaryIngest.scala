@@ -36,7 +36,7 @@ object SummaryIngest {
 
   /** Per-source bottom-k partials for one batch of (source, h) rows. */
   def kmvBatch(batch: DataFrame, k: Int = 128): DataFrame =
-    TopKPerKey.twoPhase(batch.select(col("source"), col("h")).distinct(),
+    TopKPerKey.ranked(batch.select(col("source"), col("h")).distinct(),
       Seq(col("source")), Seq(col("h").asc), k)
       .select(col("source"), col("h"))
 

@@ -38,12 +38,12 @@ object TrendingTokens {
   def mergeCounts(a: DataFrame, b: DataFrame): DataFrame =
     a.unionByName(b).groupBy(col("token")).agg(sum(col("n")).as("n"))
 
-  /** Deterministic top-k of a counts frame: (n desc, token). Two-phase
-    * ([[TopKPerKey.twoPhase]]): the global window ranks at most
-    * k·partitions rows — never the whole vocabulary.
+  /** Deterministic top-k of a counts frame: (n desc, token), through
+    * [[TopKPerKey.ranked]] — a global top-k plans as a
+    * TakeOrderedAndProject, never a sort of the whole vocabulary.
     */
   def topK(counts: DataFrame, k: Int): DataFrame =
-    TopKPerKey.twoPhase(counts, Nil, Seq(col("n").desc, col("token")), k)
+    TopKPerKey.ranked(counts, Nil, Seq(col("n").desc, col("token")), k)
       .select(col("token"), col("n"), col("rank"))
       .orderBy(col("rank"))
 
